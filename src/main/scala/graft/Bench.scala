@@ -39,6 +39,13 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** The sum of the successful timings and the names of the failed
+    * queries (time −1): a failure marks the run incomplete instead of
+    * making its total smaller.
+    */
+  private[graft] def tally(secs: Seq[(String, Double)]): (Double, Seq[String]) =
+    (secs.collect { case (_, s) if s >= 0 => s }.sum, secs.collect { case (n, s) if s < 0 => n })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -117,14 +124,14 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     case class Rep(idx: Int, loadBefore: String, loadAfter: String,
-                   secs: Map[String, Double], total: Double)
+                   secs: Map[String, Double], total: Double, failed: Seq[String])
     val repRuns = (1 to reps).map { i =>
       val lb = loadAvg()
       val secs = names.map(n => n -> materialize(n)).toMap
       val la = loadAvg()
-      val total = secs.values.filter(_ >= 0).sum
+      val (total, failed) = tally(names.map(n => n -> secs(n)))
       System.err.println(f"[bench] rep $i/$reps total=$total%.1fs load=$lb->$la")
-      Rep(i, lb, la, secs, total)
+      Rep(i, lb, la, secs, total, failed)
     }
 
     val medians = names.map { n =>
@@ -134,7 +141,8 @@ object Bench {
       val xs = repRuns.map(_.secs(n)).filter(_ >= 0)
       n -> (if (xs.isEmpty) -1.0 else xs.max - xs.min)
     }
-    val medianTotal = medians.map(_._2).filter(_ >= 0).sum
+    val (medianTotal, _) = tally(medians)
+    val failed = repRuns.flatMap(_.failed).distinct.sorted
 
     def jmap(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }.mkString("{", ",", "}")
@@ -150,11 +158,16 @@ object Bench {
          |"build":${jmap(builds)},
          |"queries":${jmap(medians)},
          |"spread":${jmap(spreads)},
+         |"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},
          |"runs":$repsJson}""".stripMargin
     Files.write(Paths.get(outPath), artifact.getBytes(StandardCharsets.UTF_8))
     System.err.println(s"[bench] full artifact -> $outPath")
 
     println(driverLine)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED ${failed.size} queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

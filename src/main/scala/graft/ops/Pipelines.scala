@@ -147,12 +147,20 @@ object Pipelines {
         col("device_type"), col("browser"), col("operating_system"),
         col("visit_count"), col("unique_users"), col("unique_sessions"))
 
-  /** A5: the tiny per-batch page-count re-aggregation feeding the KV sink
-    * (reference `stream_processor.py:369`). Cardinality is bounded by the
-    * page vocabulary, so the downstream `collect()` in the sink is safe.
+  /** A5: the tiny per-batch re-aggregation feeding the KV sink (reference
+    * `stream_processor.py:369`), for page views and purchases in one job:
+    * per `(event_type, page)` the row count `n`, the max event time as
+    * epoch seconds `ts` and the `decimal(18,2)` revenue sum `revenue`.
+    * Cardinality is bounded by event type × page vocabulary, so the
+    * downstream `collect()` in the sink is safe.
     */
-  def pageCounts(batch: DataFrame): DataFrame =
-    batch.groupBy(col("page")).count()
+  def kvRollup(batch: DataFrame): DataFrame =
+    batch
+      .groupBy(col("event_type"), col("page"))
+      .agg(
+        count(lit(1)).as("n"),
+        unix_timestamp(max(col("timestamp"))).as("ts"),
+        sum(col("total_amount").cast("decimal(18,2)")).as("revenue"))
 
   /** Streaming/batch-unified exact dedup (M5): on a stream, state for a
     * key is dropped once the watermark passes its event time

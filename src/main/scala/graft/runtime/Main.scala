@@ -21,7 +21,7 @@ import graft.source.{ClickstreamSource, KafkaSourceConfig}
   *    text features → quality gate → deterministic hash sample → exact
   *    dedup) over a parquet document STREAM with `Trigger.AvailableNow` —
   *    the backfill shape: drain everything, write curated parquet, stop;
-  *  - default demo mode: drive the full six-query engine from the
+  *  - default demo mode: drive the full five-query engine from the
   *    deterministic generator through a MemoryStream, then print what the
   *    sinks received — a self-contained end-to-end run.
   * Sinks: JDBC (upsert, keyed per table) when `POSTGRES_HOST` is set,
@@ -124,8 +124,11 @@ object Main {
           // the whole curation plan over the micro-batch
           batch.persist()
           try {
-            kept.addAndGet(batch.count())
-            batch.write.mode("append").parquet(outDir)
+            val n = batch.count()
+            if (n > 0) {
+              kept.addAndGet(n)
+              batch.write.mode("append").parquet(outDir)
+            }
           } finally batch.unpersist()
         }
         q.awaitTermination()
@@ -137,7 +140,7 @@ object Main {
         implicit val sqlCtx = spark.sqlContext
         val n = sys.env.getOrElse("GRAFT_DEMO_EVENTS", "5000").toLong
         val stream = MemoryStream[ClickstreamEvent]
-        ClickstreamProcessor.start(runner, stream.toDF(), write, kv)
+        val started = ClickstreamProcessor.start(runner, stream.toDF(), write, kv)
         // Generate distributed and cache; materialize BEFORE the timed
         // window (generation cost is not streaming throughput). The driver
         // then pulls one partition at a time via toLocalIterator — it never
@@ -156,7 +159,7 @@ object Main {
         val secs = (System.nanoTime() - t0) / 1e9
         runner.stopAll()
         ds.unpersist()
-        println(f"[graft] processed $n events through 6 streaming queries " +
+        println(f"[graft] processed $n events through ${started.size} streaming queries " +
           f"in $secs%.1f s (${n / secs}%.0f events/s end-to-end)")
         captured.forEach((t, c) => println(s"[graft] table $t: $c rows written"))
         kv match {

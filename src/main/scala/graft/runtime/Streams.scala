@@ -67,8 +67,12 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
     })
 
   /** T1/T2/T3/T4/T5: start one update-mode micro-batch query with its own
-    * checkpoint dir and a retry-wrapped foreachBatch sink. Empty batches
-    * are skipped (P8, the reference's `batch_df.isEmpty()` guards).
+    * checkpoint dir and a retry-wrapped foreachBatch sink. The sink sees
+    * every micro-batch, empty ones included (a no-data batch that only
+    * advances the watermark): each sink skips empty input itself (P8, the
+    * reference's `batch_df.isEmpty()` guards) — a guard here would be a
+    * second action, and every action re-runs the micro-batch plan, state
+    * store included.
     */
   def start(df: DataFrame, name: String)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
     // ledger (outermost) → retry (inner): failed retries never commit the
@@ -84,12 +88,27 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
       .option("checkpointLocation", s"${cfg.checkpointDir}/$name")
       .trigger(if (cfg.availableNow) Trigger.AvailableNow()
         else Trigger.ProcessingTime(s"${cfg.batchDurationSec} seconds"))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) effective(batch, id)
-      }
+      .foreachBatch(effective)
       .start()
     queries.synchronized(queries += q)
     q
+  }
+
+  /** Start queries that run side by side, each on
+    * `max(1, defaultParallelism / queries)` state partitions instead of the
+    * session's shuffle-partition count: every stateful query commits one
+    * state store per partition per micro-batch, so n queries × p
+    * partitions is a fixed cost that each micro-batch pays whatever its
+    * size. A query fixes the count when `DataStreamWriter.start()` clones
+    * the session, and records it in its offset log; the session's own
+    * value is set only around the starts and restored afterwards. A query
+    * restarted from an existing checkpoint keeps the checkpoint's count.
+    */
+  def startTogether(specs: Seq[(DataFrame, String, (DataFrame, Long) => Unit)]): Seq[StreamingQuery] = {
+    val parts = math.max(1, spark.sparkContext.defaultParallelism / math.max(1, specs.size))
+    StreamRunner.withShufflePartitions(spark, parts) {
+      specs.map { case (df, name, sink) => start(df, name)(sink) }
+    }
   }
 
   def active: Seq[StreamingQuery] = queries.synchronized(queries.toSeq)
@@ -107,6 +126,25 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
   }
 
   def processAllAvailable(): Unit = active.foreach(_.processAllAvailable())
+}
+
+object StreamRunner {
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Run `f` with the session's shuffle-partition count set to `n`, then
+    * restore it. Serialized: two concurrent callers would otherwise
+    * restore each other's value.
+    */
+  private[runtime] def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
+    synchronized {
+      val old = spark.conf.getOption(ShufflePartitions)
+      spark.conf.set(ShufflePartitions, n.toLong)
+      try f
+      finally old match {
+        case Some(v) => spark.conf.set(ShufflePartitions, v)
+        case None    => spark.conf.unset(ShufflePartitions)
+      }
+    }
 }
 
 /** Exactly-once-ish sink discipline (SURVEY.md §7.4.5): foreachBatch +
@@ -138,8 +176,9 @@ object ExactlyOnce {
 }
 
 /** The engine assembled: the reference's four concurrent pipelines
-  * (`stream_processor.py:515-522`) + the two Redis paths, wired to real
-  * sinks. `jdbcWrite`/KV are injected so tests run fully in-process.
+  * (`stream_processor.py:515-522`) + its two Redis paths, folded into one
+  * query, wired to real sinks. `jdbcWrite`/KV are injected so tests run
+  * fully in-process.
   */
 object ClickstreamProcessor {
 
@@ -159,44 +198,41 @@ object ClickstreamProcessor {
   def deviceStats(write: (DataFrame, String) => Unit)(batch: DataFrame, id: Long): Unit =
     write(batch, "device_stats")
 
-  /** K5+K6: per-page counters and 24h time-series in the KV store —
-    * the reference's intended `update_redis_page_counts`
-    * (`stream_processor.py:363-402`): re-aggregate the micro-batch by page
-    * (bounded by the 14-page vocabulary, so the collect is safe), then one
-    * pipelined round trip.
+  /** K5+K6+K7 in one pipelined round trip, from one re-aggregation of the
+    * micro-batch by `(event_type, page)` ([[Pipelines.kvRollup]]):
+    *  - K5+K6, the reference's intended `update_redis_page_counts`
+    *    (`stream_processor.py:363-402`): per-page view counters and a 24h
+    *    time series. One batch-level series timestamp (the reference stamps
+    *    the batch with now(); we use the max event time of the batch's page
+    *    views — null-safe: a batch whose timestamps are all null, e.g.
+    *    malformed JSON, still counts pages but records no series point);
+    *  - K7, the reference's missing `update_redis_purchase_metrics`
+    *    (`stream_processor.py:243-249`): running purchase count and the
+    *    `decimal(18,2)` revenue sum, added as a double.
+    * Other event types are ignored; an empty batch makes no KV call.
     */
-  def redisPageCounts(kv: KeyValueSink)(batch: DataFrame, id: Long): Unit = {
-    // One batch-level series timestamp (the reference stamps the batch with
-    // now(); we use the batch's max event time — null-safe: a batch whose
-    // timestamps are all null, e.g. malformed JSON, still counts pages but
-    // records no series point).
-    val tsRow = batch.agg(unix_timestamp(max(col("timestamp"))).as("ts")).collect()(0)
-    val batchTs = if (tsRow.isNullAt(0)) None else Some(tsRow.getLong(0))
-    val counts = Pipelines.pageCounts(batch).collect()
-    val p = kv.pipeline()
-    counts.foreach { r =>
-      val page = r.getString(0)
-      val n = r.getLong(1)
-      p.increment(s"page_views:$page", n)
-      batchTs.foreach(ts =>
-        p.addTimeSeries(s"page_views_ts:$page", ts, n, ttlSec = 86400L))
+  def redisMetrics(kv: KeyValueSink)(batch: DataFrame, id: Long): Unit = {
+    val rows = Pipelines.kvRollup(batch).collect()
+    val views = rows.filter(_.getString(0) == "page_view")
+    val buys = rows.filter(_.getString(0) == "purchase")
+    if (views.nonEmpty || buys.nonEmpty) {
+      val batchTs = views.filterNot(_.isNullAt(3)).map(_.getLong(3)).maxOption
+      val p = kv.pipeline()
+      views.foreach { r =>
+        val page = r.getString(1)
+        val n = r.getLong(2)
+        p.increment(s"page_views:$page", n)
+        batchTs.foreach(ts =>
+          p.addTimeSeries(s"page_views_ts:$page", ts, n, ttlSec = 86400L))
+      }
+      if (buys.nonEmpty) {
+        p.increment("purchases:count", buys.map(_.getLong(2)).sum)
+        val revenue = buys.filterNot(_.isNullAt(4)).map(_.getDecimal(4))
+        if (revenue.nonEmpty)
+          p.incrementByFloat("revenue:total", revenue.reduce(_ add _).doubleValue)
+      }
+      p.execute()
     }
-    p.execute()
-  }
-
-  /** K7: the reference's missing `update_redis_purchase_metrics` — running
-    * revenue/purchase counters (minimal faithful interpretation of
-    * `stream_processor.py:243-249`).
-    */
-  def redisPurchaseMetrics(kv: KeyValueSink)(batch: DataFrame, id: Long): Unit = {
-    val row = batch.agg(
-      count(lit(1)).as("n"),
-      sum(col("total_amount").cast("decimal(18,2)")).cast("double").as("revenue"))
-      .collect()(0)
-    val p = kv.pipeline()
-    p.increment("purchases:count", row.getLong(0))
-    if (!row.isNullAt(1)) p.incrementByFloat("revenue:total", row.getDouble(1))
-    p.execute()
   }
 
   /** Upsert keys for each relational table — the window/dimension columns
@@ -210,17 +246,19 @@ object ClickstreamProcessor {
     "device_stats" -> Seq("window_start", "window_end", "device_type",
       "browser", "operating_system"))
 
-  /** Start all six queries (4 JDBC + 2 KV) off one source DataFrame. */
+  /** Start all five queries (4 JDBC + 1 KV) off one source DataFrame,
+    * side by side ([[StreamRunner.startTogether]]). Every sink skips an
+    * empty micro-batch: the JDBC upserts open no connection for an empty
+    * partition, [[redisMetrics]] makes no KV call.
+    */
   def start(runner: StreamRunner, source: DataFrame,
-            write: (DataFrame, String) => Unit, kv: KeyValueSink): Seq[StreamingQuery] = {
-    val purchases = source.filter(col("event_type") === "purchase")
-    Seq(
-      runner.start(Pipelines.pageViews(source), "page_views")(pageViewStats(write)),
-      runner.start(source.filter(col("event_type") === "page_view"),
-        "redis_page_views")(redisPageCounts(kv)),
-      runner.start(Pipelines.sessions(source), "user_sessions")(sessionStats(write)),
-      runner.start(Pipelines.conversions(source), "conversions")(purchaseStats(write)),
-      runner.start(purchases, "redis_purchases")(redisPurchaseMetrics(kv)),
-      runner.start(Pipelines.deviceStats(source), "device_stats")(deviceStats(write)))
-  }
+            write: (DataFrame, String) => Unit, kv: KeyValueSink): Seq[StreamingQuery] =
+    runner.startTogether(Seq(
+      (Pipelines.pageViews(source), "page_views", pageViewStats(write)),
+      (Pipelines.sessions(source), "user_sessions", sessionStats(write)),
+      (Pipelines.conversions(source), "conversions", purchaseStats(write)),
+      (Pipelines.deviceStats(source), "device_stats", deviceStats(write)),
+      (source.filter(col("event_type").isin("page_view", "purchase"))
+        .select("event_type", "page", "timestamp", "total_amount"),
+        "redis_metrics", redisMetrics(kv))))
 }

@@ -1,6 +1,7 @@
 package graft.runtime
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -8,17 +9,17 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.gen.ClickstreamGen
-import graft.model.ClickstreamEvent
+import graft.model.{ClickstreamEvent, Device}
 import graft.ops.Pipelines
-import graft.sink.InMemoryKV
+import graft.sink.{InMemoryKV, KeyValuePipeline, KeyValueSink}
 
-/** Drives the full six-query engine (4 relational + 2 KV sinks) on a
+/** Drives the full five-query engine (4 relational sinks + 1 KV sink) on a
   * MemoryStream and checks the persisted outputs against batch-computed
   * truths — the end-to-end the reference never had.
   */
 class StreamRunnerSpec extends SparkSpec {
 
-  test("ClickstreamProcessor: all six queries persist correct micro-batch output") {
+  test("ClickstreamProcessor: all five queries persist correct micro-batch output") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -35,7 +36,7 @@ class StreamRunnerSpec extends SparkSpec {
 
     val queries = ClickstreamProcessor.start(runner, stream.toDF(), write, kv)
     try {
-      assert(queries.length == 6)
+      assert(queries.length == 5)
       stream.addData(evs)
       runner.processAllAvailable()
 
@@ -141,5 +142,103 @@ class StreamRunnerSpec extends SparkSpec {
       assert(attempts.get() >= 2)
       assert(rows.get() == 10L)
     } finally runner.stopAll()
+  }
+
+  /** The in-memory KV store, recording every pipelined command as
+    * `op key`.
+    */
+  private final class RecordingKV extends KeyValueSink {
+    val mem = new InMemoryKV
+    val ops = scala.collection.mutable.Buffer.empty[String]
+    def pipeline(): KeyValuePipeline = {
+      val p = mem.pipeline()
+      new KeyValuePipeline {
+        private def rec(op: String, k: String): Unit = ops.synchronized(ops += s"$op $k")
+        def set(k: String, v: String): Unit = { rec("set", k); p.set(k, v) }
+        def setEx(k: String, v: String, ttl: Long): Unit = { rec("setEx", k); p.setEx(k, v, ttl) }
+        def increment(k: String, by: Long): Unit = { rec("incr", k); p.increment(k, by) }
+        def incrementByFloat(k: String, by: Double): Unit = {
+          rec("incrf", k); p.incrementByFloat(k, by)
+        }
+        def addTimeSeries(k: String, ts: Long, v: Long, ttl: Long): Unit = {
+          rec("series", k); p.addTimeSeries(k, ts, v, ttl)
+        }
+        def expire(k: String, ttl: Long): Unit = { rec("expire", k); p.expire(k, ttl) }
+        def delete(k: String): Unit = { rec("del", k); p.delete(k) }
+        def execute(): Unit = { rec("execute", ""); p.execute() }
+      }
+    }
+    def get(key: String): Option[String] = mem.get(key)
+    def getCounter(key: String): Long = mem.getCounter(key)
+    def getTimeSeries(key: String): Seq[(Long, Long)] = mem.getTimeSeries(key)
+    override def close(): Unit = ()
+  }
+
+  private def ev(ts: Timestamp, page: String, eventType: String,
+                 amount: Option[Double] = None) =
+    ClickstreamEvent(Some(1), "s", ts, page, eventType, "direct", Device("d", "b", "o"),
+      "ip", "ua", None, None, None, None, None, amount)
+
+  private def sinkKv(evs: Seq[ClickstreamEvent]): RecordingKV = {
+    import spark.implicits._
+    val kv = new RecordingKV
+    ClickstreamProcessor.redisMetrics(kv)(evs.toDF(), 0L)
+    kv
+  }
+
+  private val t0 = Timestamp.valueOf("2024-01-01 00:00:10")
+  private val t1 = Timestamp.valueOf("2024-01-01 00:00:20.5")
+  private val t2 = Timestamp.valueOf("2024-01-01 00:05:00")
+
+  test("folded KV sink: an empty batch, or one of other event types, makes no KV call") {
+    assert(sinkKv(Seq.empty).ops.isEmpty)
+    assert(sinkKv(Seq(ev(t0, "/", "search"), ev(t1, "/cart", "add_to_cart"))).ops.isEmpty)
+  }
+
+  test("folded KV sink: all-null timestamps count pages but write no series point") {
+    val kv = sinkKv(Seq(ev(null, "/", "page_view"), ev(null, "/", "page_view"),
+      ev(null, "/cart", "page_view")))
+    assert(kv.getCounter("page_views:/") == 2L)
+    assert(kv.getCounter("page_views:/cart") == 1L)
+    assert(!kv.ops.exists(_.startsWith("series")))
+    assert(kv.ops.count(_ == "execute ") == 1)
+  }
+
+  test("folded KV sink: a batch of only page views") {
+    val kv = sinkKv(Seq(ev(t0, "/", "page_view"), ev(t1, "/", "page_view"),
+      ev(t0, "/cart", "page_view")))
+    assert(kv.getCounter("page_views:/") == 2L)
+    assert(kv.getCounter("page_views:/cart") == 1L)
+    // one batch-level stamp: the max event time, in whole seconds
+    val stamp = t1.getTime / 1000L
+    assert(kv.getTimeSeries("page_views_ts:/") == Seq(stamp -> 2L))
+    assert(kv.getTimeSeries("page_views_ts:/cart") == Seq(stamp -> 1L))
+    assert(kv.mem.getTtl("page_views_ts:/").contains(86400L))
+    assert(kv.ops.sorted == Seq("execute ", "incr page_views:/", "incr page_views:/cart",
+      "series page_views_ts:/", "series page_views_ts:/cart"))
+  }
+
+  test("folded KV sink: a batch of only purchases") {
+    val kv = sinkKv(Seq(ev(t0, "/payment", "purchase", Some(25.0)),
+      ev(t1, "/payment", "purchase", Some(10.5)), ev(t1, "/payment", "purchase")))
+    assert(kv.getCounter("purchases:count") == 3L)
+    assert(kv.mem.getFloatCounter("revenue:total") == 35.5)
+    assert(kv.ops.sorted == Seq("execute ", "incr purchases:count", "incrf revenue:total"))
+  }
+
+  test("folded KV sink: revenue is the decimal sum to the cent; the series stamp " +
+       "comes from page views only") {
+    val amounts = Seq(0.1, 0.2, 19.99, 1234567.89, 0.015)
+    val kv = sinkKv(
+      amounts.zipWithIndex.map { case (a, i) =>
+        ev(t2, if (i % 2 == 0) "/payment" else "/cart", "purchase", Some(a))
+      } ++ Seq(ev(t0, "/", "page_view"), ev(null, "/", "page_view")))
+    val cents = amounts.map(a => BigDecimal(a).setScale(2, BigDecimal.RoundingMode.HALF_UP)).sum
+    assert(cents == BigDecimal("1234588.20"))
+    assert(kv.mem.getFloatCounter("revenue:total") == cents.toDouble)
+    assert(kv.mem.getFloatCounter("revenue:total") != amounts.sum)
+    assert(kv.getCounter("purchases:count") == amounts.size.toLong)
+    assert(kv.getCounter("page_views:/") == 2L)
+    assert(kv.getTimeSeries("page_views_ts:/") == Seq(t0.getTime / 1000L -> 2L))
   }
 }
