@@ -2,9 +2,10 @@ package graft.runtime
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 
 import graft.ops.Pipelines
 import graft.sink.{JdbcSink, KeyValueSink}
@@ -23,10 +24,12 @@ import graft.sink.{JdbcSink, KeyValueSink}
 final case class StreamConfig(
     checkpointDir: String,
     batchDurationSec: Int = 5, // reference default, config.py:51
-    outputMode: String = "update",
     /** RocksDB state store: off-heap, spill-to-disk streaming state — the
       * right provider once session/window state exceeds executor heap
       * (SURVEY.md §7.5). Default HDFS-backed in-memory store otherwise.
+      * Applies to the queries this config's runner starts, not to the
+      * session; a query restarted from a checkpoint keeps the provider its
+      * offset log records.
       */
     useRocksDbStateStore: Boolean = false,
     /** When set, every sink is wrapped in the ExactlyOnce batchId ledger
@@ -42,10 +45,7 @@ final case class StreamConfig(
     availableNow: Boolean = false)
 
 class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
-
-  if (cfg.useRocksDbStateStore)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  import StreamRunner._
 
   private val queries = scala.collection.mutable.Buffer.empty[StreamingQuery]
   private val stopping = new AtomicBoolean(false)
@@ -67,14 +67,69 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
     })
 
   /** T1/T2/T3/T4/T5: start one update-mode micro-batch query with its own
-    * checkpoint dir and a retry-wrapped foreachBatch sink. The sink sees
-    * every micro-batch, empty ones included (a no-data batch that only
-    * advances the watermark): each sink skips empty input itself (P8, the
-    * reference's `batch_df.isEmpty()` guards) — a guard here would be a
-    * second action, and every action re-runs the micro-batch plan, state
-    * store included.
+    * checkpoint dir and a retry-wrapped foreachBatch sink.
+    *
+    * Update mode is fixed, not an option: every pipeline wired here is an
+    * aggregation whose rows are revised in place by key (the JDBC upserts,
+    * the KV increments), and it is what lets the query run without
+    * no-data micro-batches. In update mode a stateful aggregation's no-data
+    * batch only removes expired state and emits no row, so the query runs
+    * a micro-batch only when input arrived, and state that the watermark
+    * expired is removed by the next data batch instead.
+    *
+    * The sink sees every micro-batch the query runs and skips empty input
+    * itself (P8, the reference's `batch_df.isEmpty()` guards): a guard here
+    * would be a second action, and every action re-runs the micro-batch
+    * plan, state store included.
+    *
+    * The query's settings ([[querySettings]]) apply only to it: they are
+    * set on the session around `DataStreamWriter.start()`, which clones the
+    * session, and restored afterwards.
     */
-  def start(df: DataFrame, name: String)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
+  def start(df: DataFrame, name: String)(sink: (DataFrame, Long) => Unit): StreamingQuery =
+    withSessionConf(spark, querySettings)(startQuery(df, name, sink))
+
+  /** Start queries that run side by side, each on
+    * `max(1, defaultParallelism / queries)` state partitions instead of the
+    * session's shuffle-partition count: every stateful query commits one
+    * state store per partition per micro-batch, so n queries × p
+    * partitions is a fixed cost that each micro-batch pays whatever its
+    * size. The count is set with the other [[querySettings]] around the
+    * starts; a query records it in its offset log, so a query restarted
+    * from an existing checkpoint keeps the checkpoint's count.
+    */
+  def startTogether(specs: Seq[(DataFrame, String, (DataFrame, Long) => Unit)]): Seq[StreamingQuery] = {
+    val parts = math.max(1, spark.sparkContext.defaultParallelism / math.max(1, specs.size))
+    withSessionConf(spark, querySettings + (ShufflePartitions -> parts.toString)) {
+      specs.map { case (df, name, sink) => startQuery(df, name, sink) }
+    }
+  }
+
+  /** The session settings every query of this runner starts with:
+    *  - no no-data micro-batches (see [[start]]);
+    *  - the RocksDB state store, when configured;
+    *  - on Hadoop's local file system, Spark's FileSystem-based checkpoint
+    *    file manager, unless the session names another manager. The
+    *    default FileContext-based manager renames through
+    *    `AbstractFileSystem.rename`, which resolves links with
+    *    `FileUtil.readLink` and so forks a `readlink` process for every
+    *    offset, commit, state and RocksDB file it writes. The
+    *    FileSystem-based manager renames with `File.renameTo` through the
+    *    same `ChecksumFileSystem`, so it writes the same files with the
+    *    same `.crc` sidecars.
+    */
+  private def querySettings: Map[String, String] = {
+    val localFs = new Path(cfg.checkpointDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration).isInstanceOf[LocalFileSystem]
+    Map(NoDataMicroBatches -> "false") ++
+      Option.when(cfg.useRocksDbStateStore)(StateStoreProvider -> RocksDbProvider) ++
+      Option.when(localFs &&
+          spark.conf.getOption(CheckpointFileManager).forall(_ == FileSystemCheckpointFileManager))(
+        CheckpointFileManager -> FileSystemCheckpointFileManager)
+  }
+
+  private def startQuery(df: DataFrame, name: String,
+                         sink: (DataFrame, Long) => Unit): StreamingQuery = {
     // ledger (outermost) → retry (inner): failed retries never commit the
     // ledger entry, so the batch is re-attempted on redelivery.
     val retried: (DataFrame, Long) => Unit =
@@ -84,7 +139,7 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
       .getOrElse(retried)
     val q = df.writeStream
       .queryName(name)
-      .outputMode(cfg.outputMode)
+      .outputMode(OutputMode.Update())
       .option("checkpointLocation", s"${cfg.checkpointDir}/$name")
       .trigger(if (cfg.availableNow) Trigger.AvailableNow()
         else Trigger.ProcessingTime(s"${cfg.batchDurationSec} seconds"))
@@ -92,23 +147,6 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
       .start()
     queries.synchronized(queries += q)
     q
-  }
-
-  /** Start queries that run side by side, each on
-    * `max(1, defaultParallelism / queries)` state partitions instead of the
-    * session's shuffle-partition count: every stateful query commits one
-    * state store per partition per micro-batch, so n queries × p
-    * partitions is a fixed cost that each micro-batch pays whatever its
-    * size. A query fixes the count when `DataStreamWriter.start()` clones
-    * the session, and records it in its offset log; the session's own
-    * value is set only around the starts and restored afterwards. A query
-    * restarted from an existing checkpoint keeps the checkpoint's count.
-    */
-  def startTogether(specs: Seq[(DataFrame, String, (DataFrame, Long) => Unit)]): Seq[StreamingQuery] = {
-    val parts = math.max(1, spark.sparkContext.defaultParallelism / math.max(1, specs.size))
-    StreamRunner.withShufflePartitions(spark, parts) {
-      specs.map { case (df, name, sink) => start(df, name)(sink) }
-    }
   }
 
   def active: Seq[StreamingQuery] = queries.synchronized(queries.toSeq)
@@ -130,19 +168,28 @@ class StreamRunner(spark: SparkSession, cfg: StreamConfig) {
 
 object StreamRunner {
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val NoDataMicroBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val CheckpointFileManager = "spark.sql.streaming.checkpointFileManagerClass"
+  private val FileSystemCheckpointFileManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
-  /** Run `f` with the session's shuffle-partition count set to `n`, then
-    * restore it. Serialized: two concurrent callers would otherwise
-    * restore each other's value.
+  /** Run `f` with `settings` set on the session, then restore each key's
+    * previous value, or unset it if the session did not set it. Serialized:
+    * two concurrent callers would otherwise restore each other's values.
     */
-  private[runtime] def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
+  private def withSessionConf[T](spark: SparkSession, settings: Map[String, String])(
+      f: => T): T =
     synchronized {
-      val old = spark.conf.getOption(ShufflePartitions)
-      spark.conf.set(ShufflePartitions, n.toLong)
+      val explicit = spark.conf.getAll
+      val old = settings.keys.map(k => k -> explicit.get(k))
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
       try f
-      finally old match {
-        case Some(v) => spark.conf.set(ShufflePartitions, v)
-        case None    => spark.conf.unset(ShufflePartitions)
+      finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
     }
 }

@@ -1,7 +1,11 @@
 package graft.runtime
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
@@ -13,8 +17,9 @@ import graft.ops.Pipelines
 import graft.sink.InMemoryKV
 
 /** The fixed per-micro-batch cost of the five side-by-side queries: how
-  * many state partitions each one commits, and how many times each
-  * micro-batch plan runs.
+  * many state partitions each one commits, how many times each
+  * micro-batch plan runs, whether a micro-batch runs without input, and
+  * which processes writing the checkpoint files starts.
   */
 class StatePartitionsSpec extends SparkSpec {
 
@@ -24,6 +29,35 @@ class StatePartitionsSpec extends SparkSpec {
                           (DataFrame, String) => Unit) = {
     val tables = new java.util.concurrent.ConcurrentHashMap[String, Seq[Row]]()
     (tables, (df, table) => tables.merge(table, df.collect().toSeq, (a, b) => a ++ b))
+  }
+
+  private val CheckpointFileManager = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** `n` generated events, all within minute `minute` of 2024-01-01T00:00Z. */
+  private def eventsAt(minute: Int, n: Int = 200): Seq[ClickstreamEvent] = {
+    val evs = ClickstreamGen.events(spark, n, numPartitions = 1, seed = 42L + minute,
+      startMillis = ClickstreamGen.DefaultStart + minute * 60000L).collect().toSeq
+    assert(evs.map(_.timestamp.getTime / 60000L).distinct ==
+      Seq(ClickstreamGen.DefaultStart / 60000L + minute))
+    evs
+  }
+
+  /** The command lines of the processes this JVM started while `f` ran. */
+  private def processesStarted(f: => Unit): Seq[String] = {
+    val rec = new Recording()
+    val file = Files.createTempFile("graft-procs", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try f finally rec.stop()
+      rec.dump(file)
+      RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(file)
+    }
   }
 
   /** The progress of the query's last micro-batch that read input. */
@@ -95,5 +129,81 @@ class StatePartitionsSpec extends SparkSpec {
         "conversions" -> 4, "device_stats" -> 1))
       assert(t2.get("purchase_stats").map(_.getLong(2)) == Seq(purchases(events)))
     } finally run2.stopAll()
+  }
+
+  test("no micro-batch runs without input; expired state goes with the next data batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val chunks = Seq(0, 5, 10).map(eventsAt(_))
+    val stream = MemoryStream[ClickstreamEvent]
+    val runner = new StreamRunner(spark,
+      StreamConfig(Files.createTempDirectory("graft-ck-nodata").toString, batchDurationSec = 1))
+    val (tables, write) = capture()
+    val queries = ClickstreamProcessor.start(runner, stream.toDF(), write, new InMemoryKV)
+    try {
+      chunks.foreach { c => stream.addData(c); runner.processAllAvailable() }
+      // a trigger that found no input and ran no batch has no addBatch phase
+      queries.foreach { q =>
+        val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        assert(ran.length == 3 && ran.forall(_.numInputRows > 0),
+          s"${q.name}: ${ran.map(p => p.batchId -> p.numInputRows).mkString(", ")}")
+      }
+      // a batch evicts with the watermark of the batch before it: minute 5
+      // moves the watermark past the minute-0 windows, minute 10 removes them
+      val pv = queries.find(_.name == "page_views").get
+        .recentProgress.filter(_.numInputRows > 0)
+      assert(pv.map(_.stateOperators(0).numRowsRemoved).toSeq.take(2) == Seq(0L, 0L))
+      assert(pv(2).stateOperators(0).numRowsRemoved > 0, pv(2).json)
+      val expected = Pipelines.pageViews(chunks.flatten.toDF()).collect().toSeq
+      assert(tables.get("page_view_stats").sortBy(_.toString) == expected.sortBy(_.toString))
+    } finally runner.stopAll()
+  }
+
+  test("checkpoint files on the local file system: no readlink process, " +
+       "Hadoop's checksum sidecars kept") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val evs = eventsAt(0, 400)
+    val ck = Files.createTempDirectory("graft-ck-procs").toString
+    val stream = MemoryStream[ClickstreamEvent]
+    val runner = new StreamRunner(spark,
+      StreamConfig(ck, batchDurationSec = 1, useRocksDbStateStore = true))
+    val (_, write) = capture()
+    var queries = Seq.empty[StreamingQuery]
+    try {
+      val started = processesStarted {
+        queries = ClickstreamProcessor.start(runner, stream.toDF(), write, new InMemoryKV)
+        stream.addData(evs)
+        runner.processAllAvailable()
+      }
+      assert(!started.exists(_.startsWith("readlink")), started.mkString("\n"))
+      assert(spark.conf.getOption(CheckpointFileManager).isEmpty)
+      for (q <- queries; log <- Seq("offsets", "commits"))
+        assert(Files.exists(Paths.get(ck, q.name, log, ".0.crc")), s"${q.name}/$log")
+    } finally runner.stopAll()
+  }
+
+  test("a session that names its own checkpoint file manager keeps it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val fileContextManager =
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    val stream = MemoryStream[ClickstreamEvent]
+    val runner = new StreamRunner(spark, StreamConfig(
+      Files.createTempDirectory("graft-ck-manager").toString, batchDurationSec = 1))
+    spark.conf.set(CheckpointFileManager, fileContextManager)
+    try {
+      // the FileContext-based manager resolves links with a readlink process
+      val started = processesStarted {
+        runner.start(stream.toDF(), "own_manager")((batch, _) => batch.count())
+        stream.addData(eventsAt(0, 50))
+        runner.processAllAvailable()
+      }
+      assert(started.exists(_.startsWith("readlink")), started.mkString("\n"))
+      assert(spark.conf.get(CheckpointFileManager) == fileContextManager)
+    } finally {
+      runner.stopAll()
+      spark.conf.unset(CheckpointFileManager)
+    }
   }
 }

@@ -89,12 +89,12 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("RocksDB state store provider drives a stateful streaming agg") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val before = spark.conf.getOption(provider)
     val checkpoint = Files.createTempDirectory("graft-rocks").toString
     val runner = new StreamRunner(spark,
       StreamConfig(checkpoint, batchDurationSec = 1, useRocksDbStateStore = true))
     try {
-      assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDBStateStoreProvider"))
       val stream = ClickstreamSource.eventsFileStream(spark, sfDir)
         .withColumnRenamed("ts", "timestamp")
         .withColumn("page", col("event_type"))
@@ -103,12 +103,15 @@ class SourcesSpec extends SparkSpec {
           stream.withColumn("event_type", lit("page_view"))), "rocks_pv") { (df, _) =>
         rows.addAndGet(df.count())
       }
+      // the provider is the query's, recorded in its offset log, not the session's
+      assert(spark.conf.getOption(provider) == before)
+      assert(!spark.conf.getOption(provider).exists(_.contains("RocksDB")))
       runner.processAllAvailable()
       assert(rows.get() > 0, "stateful agg produced no output under RocksDB")
-    } finally {
-      runner.stopAll()
-      // restore the default provider for other suites sharing the session
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+      val offsets0 = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(checkpoint, "rocks_pv", "offsets", "0")), "UTF-8")
+      assert(s""""$provider":"[^"]*RocksDBStateStoreProvider"""".r
+        .findFirstIn(offsets0).nonEmpty, offsets0)
+    } finally runner.stopAll()
   }
 }
