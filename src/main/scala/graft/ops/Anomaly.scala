@@ -47,6 +47,12 @@ object Anomaly {
                   valueCol: String, lookback: Int = 30, minBaseline: Int = 10,
                   k: Int = 3): DataFrame = {
     require(lookback >= minBaseline && minBaseline >= 2 && k >= 1)
+    // the columns added here would silently replace a caller's own
+    val added = Seq("__v2", "n_base", "s_base", "ss_base")
+    counts.columns.find(c => added.exists(_.equalsIgnoreCase(c))).foreach { c =>
+      throw new IllegalArgumentException(
+        s"zScoreFlags input already has a column named $c (it adds ${added.mkString(", ")})")
+    }
     val w = Window.partitionBy(keyCol).orderBy(timeCol).rowsBetween(-lookback, -1)
     def dec(c: Column): Column = c.cast(DecimalType(38, 0))
     counts

@@ -729,6 +729,8 @@ object Graph {
     * node adopts the label with the greatest incident weight among its
     * neighbors' CURRENT labels, ties broken by the smallest label, for a
     * fixed number of rounds. Isolated nodes keep their own label.
+    * Every symmetrized edge weight must be positive: a non-positive or
+    * NULL one fails the call instead of silently dropping the edge.
     *
     * Scale shape: identical to [[pageRank]] — the symmetrized edge list
     * is checkpointed once (≤ |V|² aggregated rows regardless of how many
@@ -743,10 +745,13 @@ object Graph {
       // the zero-weight self-label fold below is only equivalent to the
       // old dangling-node left join while every edge weight is POSITIVE
       // (a w ≤ 0 edge could tie the self-label row and win via the
-      // label-asc tie-break) — enforce the documented precondition
-      // instead of assuming it; for both registered callers (count /
-      // sum-of-count weights ≥ 1) this filter passes every row
-      .filter(col("w") > 0)
+      // label-asc tie-break) — so a non-positive or NULL weight fails
+      // the checkpoint below rather than changing the communities; both
+      // registered callers (count / sum-of-count weights ≥ 1) pass
+      .withColumn("w", when(col("w") > 0, col("w")).otherwise(raise_error(
+        concat(lit("labelPropagation needs positive edge weights; edge "),
+          col("src").cast("string"), lit(" - "), col("dst").cast("string"),
+          lit(" weighs "), coalesce(col("w").cast("string"), lit("NULL"))))))
     val e0 = sym.localCheckpoint()
     // same loop-invariant discipline as pageRank: the node table feeds
     // the dangling-node left join EVERY round — checkpointed once

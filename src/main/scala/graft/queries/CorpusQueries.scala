@@ -2505,9 +2505,9 @@ object CorpusQueries {
     // distinct from the query-set search below. Compute is quadratic by
     // definition (the exact baseline; the bucketed scale path is
     // Ivf.search with queries = corpus, recall-gated in IvfSpec), but
-    // data movement is n·k: the inner side broadcasts once, scored
-    // pairs are consumed map-side by the bounded TopKByScore
-    // accumulator, and the one shuffle carries k entries per vector.
+    // no pair is ever a row: the corpus is packed once and broadcast,
+    // and each task of the spread corpus keeps a bounded top-k per
+    // vector while it scores all of it (Similarity.knnJoinExact).
     Q("emb_knn_join", knnJoinExactSql()) { (s, dir) =>
       Similarity.knnJoinExact(Tables(s, dir, "embeddings"), k = 5)
         .orderBy(col("q_id"), col("rnk"))

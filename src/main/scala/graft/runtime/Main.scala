@@ -30,15 +30,27 @@ import graft.source.{ClickstreamSource, KafkaSourceConfig}
   */
 object Main {
 
+  /** The entrypoint session's settings. Spark caches generated classes
+    * under (class loader, source) in a cache of
+    * `spark.sql.codegen.cache.maxEntries` entries, 100 by default, and
+    * that setting is static: only the code that builds the session can
+    * raise it. The clickstream queries alone hold about 150 keys, since
+    * each streaming query's cloned session gets its own class loader, so
+    * at 100 entries every phase recompiles classes it compiled before.
+    */
+  def sessionConf(cfg: GraftConfig): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cfg.shufflePartitions.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "2000")
+
   def main(args: Array[String]): Unit = {
     val cfg = GraftConfig.fromEnv()
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
       .appName("graft-clickstream")
-      .config("spark.sql.shuffle.partitions", cfg.shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+      .config(sessionConf(cfg))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

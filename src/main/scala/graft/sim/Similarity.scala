@@ -1,8 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorExpressions
 
@@ -11,7 +12,9 @@ import graft.functions.VectorExpressions
   * no UDFs). Two paths:
   *
   *  - brute force: every (query, candidate) pair — exact, O(|Q|·|N|); right
-  *    when |Q| is small (queries broadcast) or as the rerank stage;
+  *    when |Q| is small (queries broadcast) or as the rerank stage; the
+  *    exact kNN join and hard-negative mining score every pair in one
+  *    packed-array kernel instead of as rows ([[knnJoinExact]]);
   *  - random-hyperplane LSH: sign-bit signatures bucketed by chunk, exact
   *    rerank inside buckets — the scale path: candidate generation is a
   *    bucket join, never a cross product.
@@ -83,11 +86,24 @@ object Similarity {
       .select(col("q_id"), col("n_id"), col("cos"), col("rnk"))
   }
 
-  /** Bounded top-k accumulator for (score, id) pairs, ordered score
-    * desc / id asc — map-side combinable, so a kNN JOIN over n vectors
-    * shuffles n·k rows instead of the n² scored pairs a window-rank
-    * formulation would move. Exact doubles + deterministic tie-break →
-    * identical output under any partitioning.
+  /** The ranking order of the exact top-k family: score descending, then
+    * id ascending. Scores compare with `java.lang.Double.compare` on the
+    * negated score, a total order in which NaN ranks last. [[TopKByScore]]
+    * and the [[knnJoinExact]] / [[hardNegatives]] kernel both rank with
+    * it, so the two cannot order a tie differently.
+    */
+  object ScoreOrder {
+    /** Negative when (s1, id1) ranks before (s2, id2), zero when equal. */
+    def compare(s1: Double, id1: Long, s2: Double, id2: Long): Int = {
+      val c = java.lang.Double.compare(-s1, -s2)
+      if (c != 0) c else java.lang.Long.compare(id1, id2)
+    }
+  }
+
+  /** Bounded top-k accumulator for (score, id) pairs, ordered by
+    * [[ScoreOrder]] — map-side combinable, so a ranking over candidate
+    * rows shuffles at most k entries per key. Exact doubles + a total
+    * order → identical output under any partitioning.
     */
   final class TopKByScore(k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[
@@ -98,12 +114,12 @@ object Similarity {
     // exact-mask path emits a pair once per surviving shared token) and
     // duplicates can never occupy two of the k slots
     private def trim(s: Seq[(Double, Long)]): Seq[(Double, Long)] =
-      s.distinct.sortBy { case (score, id) => (-score, id) }.take(k)
+      s.distinct.sortWith((a, b) => ScoreOrder.compare(a._1, a._2, b._1, b._2) < 0).take(k)
     override def zero: Seq[(Double, Long)] = Seq.empty
     override def reduce(b: Seq[(Double, Long)], x: (Double, Long)): Seq[(Double, Long)] =
       if (b.size == k && {
-        val (ls, li) = b.last // k-th best; skip x if strictly worse
-        x._1 < ls || (x._1 == ls && x._2 > li)
+        val (ls, li) = b.last // k-th best; skip x unless it ranks before it
+        ScoreOrder.compare(x._1, x._2, ls, li) >= 0
       }) b else trim(b :+ x)
     override def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
       trim(a ++ b)
@@ -120,68 +136,227 @@ object Similarity {
     * search ([[bruteForceTopK]]): here the "query side" is the corpus
     * itself. Quadratic compute by definition (this is the exact
     * baseline; the bucketed scale path is `Ivf.search(corpus, corpus)`),
-    * but the DATA MOVEMENT is not quadratic: the inner side broadcasts
-    * (id, vec, norm) once per executor, scored pairs are consumed
-    * map-side by the bounded [[TopKByScore]] accumulator, and the one
-    * shuffle carries n·k (id, score) entries — never the n² pair
-    * stream a window-rank over all pairs would move.
+    * but no pair is ever a row: the corpus is packed once and broadcast,
+    * and each task of the spread corpus scores its vectors against all
+    * of it in one loop ([[exactTopK]]). The plan holds one round-robin
+    * exchange, no join and no aggregation.
+    *
+    * `vecCol` is `array<float>` or `array<double>`; ids are integral and
+    * unique (a repeated id is refused). Output `(q_id, n_id, cos, rnk)`.
     */
   def knnJoinExact(corpus: DataFrame, k: Int = 5,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val n = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"))
-    // The query side streams through the broadcast nested-loop join, so
-    // the O(n²) scoring inherits the SCAN's task count: a corpus that
-    // arrives as one compact parquet file (or a handful of coalesced
-    // splits) pins the entire quadratic stage to those few cores —
-    // measured at sf1 as a 20k-vector join saturating 1 of 32 cores for
-    // ~390 s. One round-robin shuffle of n rows is O(n) — noise against
-    // the n² it parallelizes — and balances perfectly regardless of
-    // input skew or file layout.
-    val q = spreadForCompute(corpus).select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"))
-    val topk = udaf(new TopKByScore(k))
-    q.join(broadcast(n), col("q_id") =!= col("n_id"))
-      .select(col("q_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm"))).as("cos"),
-        col("n_id"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("nn"))
-      .select(col("q_id"), posexplode(col("nn")))
-      .select(col("q_id"), col("col._2").as("n_id"), col("col._1").as("cos"),
-        (col("pos") + 1).cast("int").as("rnk"))
-  }
+                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    exactTopK(corpus, corpus, k, idCol, vecCol, labelCol = None)
 
   /** Hard-negative mining for contrastive training: for each query
     * vector, the top-k most COSINE-SIMILAR corpus vectors carrying a
     * DIFFERENT label — the negatives that sit closest to the decision
     * boundary, which is exactly what contrastive / metric-learning
     * losses want (random negatives are trivially separable and
-    * contribute no gradient). Same machinery as [[knnJoinExact]]:
-    * corpus broadcasts once, scored pairs are consumed map-side by the
-    * bounded [[TopKByScore]] accumulator, the one shuffle carries
-    * |Q|·k entries; the label-mismatch predicate rides the broadcast
-    * join condition, so same-label pairs are never scored.
+    * contribute no gradient). Same kernel as [[knnJoinExact]]: the
+    * corpus is packed once and broadcast, the queries are spread, and
+    * the label-mismatch test sits in the scoring loop, so same-label
+    * pairs are never scored. A NULL label matches nothing, as in SQL.
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int = 5,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    labelCol: String = "label"): DataFrame = {
-    val n = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      col(labelCol).as("n_label"), l2Norm(col(vecCol)).as("n_norm"))
-    val q = spreadForCompute(queries).select(col(idCol).as("q_id"),
-      col(vecCol).as("q_vec"), col(labelCol).as("q_label"),
-      l2Norm(col(vecCol)).as("q_norm"))
-    val topk = udaf(new TopKByScore(k))
-    q.join(broadcast(n),
-        col("q_id") =!= col("n_id") && col("q_label") =!= col("n_label"))
-      .select(col("q_id"),
-        (dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm"))).as("cos"),
-        col("n_id"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("n_id")).as("nn"))
-      .select(col("q_id"), posexplode(col("nn")))
-      .select(col("q_id"), col("col._2").as("n_id"), col("col._1").as("cos"),
-        (col("pos") + 1).cast("int").as("rnk"))
+                    labelCol: String = "label"): DataFrame =
+    exactTopK(corpus, queries, k, idCol, vecCol, Some(labelCol))
+
+  /** The corpus of [[exactTopK]], packed once per call: vector j is
+    * `block(off(j) until off(j + 1))`, widened to double (exact for
+    * floats), `norm(j) = sqrt(Σ v²)` summed in index order, `valid(j)`
+    * false when the vector or one of its elements is NULL, `label(j)` a
+    * dense code of its label (-1 for NULL, or every vector when
+    * unlabelled) and `labelCodes` the code of each label value.
+    */
+  private final case class PackedCorpus(ids: Array[Long], block: Array[Double],
+      off: Array[Int], norm: Array[Double], valid: Array[Boolean],
+      label: Array[Int], labelCodes: Map[Any, Int])
+
+  /** A row's float or double array as doubles; null when the array or
+    * one of its elements is NULL (its dot products are NULL then).
+    */
+  private def widen(v: scala.collection.Seq[Any]): Array[Double] =
+    if (v == null || v.contains(null)) null
+    else v.iterator.map(_.asInstanceOf[Number].doubleValue).toArray
+
+  private def norm(v: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  /** The exact top-k kernel of [[knnJoinExact]] and [[hardNegatives]].
+    * The corpus is collected and packed once per call and broadcast;
+    * each task of the spread queries scores its queries against all of
+    * it ([[scoreTask]]), so the n² pairs never become rows and nothing is
+    * aggregated or shuffled.
+    *
+    * Each score is bit-identical to `dot(q, n) / (q_norm * n_norm)` as
+    * Spark SQL evaluates it (the window-rank formulation of
+    * [[bruteForceTopK]] and the DuckDB oracles): the dot product sums
+    * doubles in index order, as `VectorExpressions.DotProduct` does.
+    * Pairs with equal ids, or (with labels) equal or NULL labels, are
+    * skipped before scoring. A zero divisor fails the query with
+    * Spark's DIVIDE_BY_ZERO error under ANSI mode; a NULL cosine (a
+    * NULL vector or element, a divisor of zero without ANSI, or a
+    * dimension mismatch) ranks as 0.0, which is how [[TopKByScore]]
+    * read it. Ranking is [[ScoreOrder]].
+    */
+  private def exactTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+                        idCol: String, vecCol: String,
+                        labelCol: Option[String]): DataFrame = {
+    require(k >= 1)
+    def checkedIdType(df: DataFrame): DataType = {
+      df.schema(vecCol).dataType match {
+        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
+        case other => throw new IllegalArgumentException(
+          s"$vecCol must be array<float> or array<double>, not ${other.simpleString}")
+      }
+      val t = df.schema(idCol).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"$idCol must be an integral type, not ${t.simpleString}")
+      t
+    }
+    checkedIdType(corpus)
+    val out = StructType(Seq(StructField("q_id", checkedIdType(queries), nullable = false),
+      StructField("n_id", LongType, nullable = false),
+      StructField("cos", DoubleType, nullable = false),
+      StructField("rnk", IntegerType, nullable = false)))
+    val rows = corpus.where(col(idCol).isNotNull)
+      .select(Seq(col(idCol).cast("long"), col(vecCol)) ++ labelCol.map(col): _*)
+      .collect()
+    val ids = rows.map(_.getLong(0))
+    val sorted = ids.sorted
+    (1 until sorted.length).find(i => sorted(i) == sorted(i - 1)).foreach { i =>
+      throw new IllegalArgumentException(s"$idCol ${sorted(i)} is not unique in the corpus")
+    }
+    val vecs = rows.map(r => widen(r.getSeq[Any](1)))
+    val labelCodes: Map[Any, Int] =
+      if (labelCol.isEmpty) Map.empty
+      else rows.iterator.map(_.get(2)).filter(_ != null).distinct.zipWithIndex.toMap
+    val packed = PackedCorpus(ids,
+      vecs.iterator.filter(_ != null).flatten.toArray,
+      vecs.scanLeft(0)((o, v) => o + (if (v == null) 0 else v.length)),
+      vecs.map(v => if (v == null) 0.0 else norm(v)),
+      vecs.map(_ != null),
+      if (labelCol.isEmpty) Array.fill(rows.length)(-1)
+      else rows.map(r => if (r.isNullAt(2)) -1 else labelCodes(r.get(2))),
+      labelCodes)
+    val spark = corpus.sparkSession
+    val bc = spark.sparkContext.broadcast(packed)
+    val ansi = spark.sessionState.conf.ansiEnabled
+    val labelled = labelCol.isDefined
+    spreadForCompute(queries.select(Seq(col(idCol), col(vecCol)) ++
+        labelCol.map(l => col(l).cast(corpus.schema(l).dataType)): _*))
+      // a NULL id or label matches no corpus vector: no pairs, no rows
+      .mapPartitions(part => scoreTask(bc.value, k, ansi, labelled,
+        part.filter(r => !r.isNullAt(0) && !(labelled && r.isNullAt(2))).toArray))(
+        Encoders.row(out))
+  }
+
+  /** `x(o until o + d)` dotted with each of `a0`..`a3`, each sum in index
+    * order, into `out(0..3)`.
+    */
+  private def dot4(x: Array[Double], o: Int, d: Int, a0: Array[Double], a1: Array[Double],
+                   a2: Array[Double], a3: Array[Double], out: Array[Double]): Unit = {
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var t = 0
+    while (t < d) {
+      val v = x(o + t)
+      s0 += a0(t) * v; s1 += a1(t) * v; s2 += a2(t) * v; s3 += a3(t) * v
+      t += 1
+    }
+    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
+  }
+
+  /** One task of [[exactTopK]]: queries `qs` as `(id, vector[, label])`
+    * rows, each query's top-k kept in a bounded insertion buffer while
+    * the whole corpus is scored. Emits `(q_id, n_id, cos, rnk)`.
+    */
+  private def scoreTask(c: PackedCorpus, k: Int, ansi: Boolean, labelled: Boolean,
+                        qs: Array[Row]): Iterator[Row] = {
+    val nq = qs.length
+    val qId = qs.map(_.getAs[Number](0).longValue)
+    val qVec = qs.map(r => widen(r.getSeq[Any](1)))
+    val qNorm = qVec.map(v => if (v == null) 0.0 else norm(v))
+    // -2: a label no corpus vector carries, so every labelled one differs
+    val qLabel = qs.map(r => if (labelled) c.labelCodes.getOrElse(r.get(2), -2) else -1)
+    val n = c.ids.length
+    val kk = math.min(k, n)
+    val topS = new Array[Double](nq * kk)
+    val topI = new Array[Long](nq * kk)
+    val size = new Array[Int](nq)
+
+    def offer(qi: Int, j: Int, dot: Double): Unit = {
+      if (c.ids(j) == qId(qi) || labelled && (c.label(j) < 0 || c.label(j) == qLabel(qi)))
+        return
+      val s =
+        if (qVec(qi) == null || !c.valid(j)) 0.0
+        else {
+          val div = qNorm(qi) * c.norm(j)
+          if (div == 0.0) {
+            if (ansi) throw org.apache.spark.sql.graft.SqlErrors.divideByZero()
+            0.0
+          } else if (qVec(qi).length != c.off(j + 1) - c.off(j)) 0.0
+          else dot / div
+        }
+      val id = c.ids(j)
+      val base = qi * kk
+      val sz = size(qi)
+      if (sz < kk || ScoreOrder.compare(s, id, topS(base + sz - 1), topI(base + sz - 1)) < 0) {
+        var p = math.min(sz, kk - 1)
+        while (p > 0 && ScoreOrder.compare(s, id, topS(base + p - 1), topI(base + p - 1)) < 0) {
+          topS(base + p) = topS(base + p - 1); topI(base + p) = topI(base + p - 1); p -= 1
+        }
+        topS(base + p) = s; topI(base + p) = id
+        if (sz < kk) size(qi) = sz + 1
+      }
+    }
+    def dot(a: Array[Double], j: Int): Double = {
+      val o = c.off(j)
+      if (a == null || !c.valid(j) || a.length != c.off(j + 1) - o) return 0.0
+      var s = 0.0
+      var t = 0
+      while (t < a.length) { s += a(t) * c.block(o + t); t += 1 }
+      s
+    }
+
+    // four queries per pass over the corpus: four independent in-order
+    // sums hide the add latency a single sum would stall on; `blockDim`
+    // is the dimension a whole block of four shares, or -1 (scored one
+    // by one)
+    val blockDim = Array.tabulate((nq + 3) / 4) { b =>
+      val vs = qVec.slice(4 * b, 4 * b + 4)
+      if (vs.length == 4 && vs.forall(v => v != null && v.length == vs(0).length)) vs(0).length
+      else -1
+    }
+    val sums = new Array[Double](4)
+    var b = 0
+    while (b < blockDim.length) {
+      val q0 = 4 * b
+      val d = blockDim(b)
+      var j = 0
+      while (j < n) {
+        if (d >= 0 && c.valid(j) && c.off(j + 1) - c.off(j) == d) {
+          dot4(c.block, c.off(j), d, qVec(q0), qVec(q0 + 1), qVec(q0 + 2), qVec(q0 + 3), sums)
+          offer(q0, j, sums(0)); offer(q0 + 1, j, sums(1))
+          offer(q0 + 2, j, sums(2)); offer(q0 + 3, j, sums(3))
+        } else {
+          var qi = q0
+          while (qi < math.min(nq, q0 + 4)) { offer(qi, j, dot(qVec(qi), j)); qi += 1 }
+        }
+        j += 1
+      }
+      b += 1
+    }
+    Iterator.range(0, nq).flatMap { qi =>
+      Iterator.range(0, size(qi)).map { r =>
+        Row(qs(qi).get(0), topI(qi * kk + r), topS(qi * kk + r), r + 1)
+      }
+    }
   }
 
   /** Embedding-space decontamination — the semantic counterpart of the

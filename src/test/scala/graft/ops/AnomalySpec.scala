@@ -109,4 +109,15 @@ class AnomalySpec extends SparkSpec {
       assert(sEv == bEv)
     } finally q.stop()
   }
+
+  test("an input column named like one zScoreFlags adds is refused, not overwritten") {
+    import org.apache.spark.sql.functions.lit
+    val base = series((0L until 12L).map(m => ("a", m, 10L)): _*)
+    for (name <- Seq("__v2", "N_BASE", "ss_base")) {
+      val e = intercept[IllegalArgumentException] {
+        Anomaly.zScoreFlags(base.withColumn(name, lit(1)), "key", "t", "cnt")
+      }
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
 }

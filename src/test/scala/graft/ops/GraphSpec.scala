@@ -384,4 +384,15 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(base == shuffled)
   }
+
+  test("labelPropagation: a non-positive edge weight raises instead of dropping the edge") {
+    import spark.implicits._
+    for (bad <- Seq(0L, -2L)) {
+      val edges = Seq((1L, 2L, 3L), (2L, 3L, 2L), (5L, 6L, bad)).toDF("src", "dst", "w")
+      val e = intercept[Exception](Graph.labelPropagation(edges, 2).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage)
+        .contains("labelPropagation needs positive edge weights")), e)
+    }
+  }
 }

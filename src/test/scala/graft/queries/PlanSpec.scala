@@ -193,15 +193,22 @@ class PlanSpec extends SparkSpec {
       !read.contains("lang"), read)
   }
 
-  test("emb_knn_join: inner side broadcasts once; the top-k agg combines map-side") {
-    val p = plan("emb_knn_join")
-    // the n² pair stream must stay inside the broadcast join's stage:
-    // the one data-bearing shuffle is the partial-combined TopKByScore
-    // aggregation (ObjectHashAggregate partial + merge around it)
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      p.take(600))
-    assert("ObjectHashAggregate".r.findAllIn(p).size >= 2,
-      "top-k aggregation must run partial (map-side) + merge:\n" + p.take(800))
+  test("emb_knn_join, emb_hard_negatives: kernel pass, no join, no aggregate") {
+    // the exact kNN kernel scores every pair inside one task pass over
+    // the broadcast corpus: no (query, neighbour) pair becomes a row, so
+    // neither plan holds a join or an aggregation, and the only
+    // exchanges are the round-robin spread of the queries and the final
+    // ORDER BY
+    for (name <- Seq("emb_knn_join", "emb_hard_negatives")) {
+      val p = plan(name)
+      assert(p.contains("MapPartitions"), s"$name:\n$p")
+      assert(!p.contains("Join"), s"$name: a pair join is back:\n$p")
+      assert(!p.contains("Aggregate"), s"$name: an aggregate is back:\n$p")
+      val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+      assert(exchanges.size == 2 &&
+        exchanges.count(_.contains("RoundRobinPartitioning")) == 1 &&
+        exchanges.count(_.contains("rangepartitioning")) == 1, s"$name:\n$p")
+    }
   }
 
   test("doc_inverted_index: text never shuffles; both rollups combine map-side") {

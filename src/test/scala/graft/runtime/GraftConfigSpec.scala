@@ -24,4 +24,12 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(c.kafkaTopic == "clickstream" && c.batchDurationSec == 5 &&
       c.shufflePartitions == 32 && c.postgresDb == "clickstream_analytics")
   }
+
+  test("the entrypoint's session sizes Spark's codegen cache past its working set") {
+    val conf = Main.sessionConf(GraftConfig.fromEnv(Map.empty))
+    // the clickstream queries hold about 150 cache keys; Spark's
+    // default of 100 entries makes every phase recompile
+    assert(conf("spark.sql.codegen.cache.maxEntries").toInt >= 1000)
+    assert(conf("spark.sql.shuffle.partitions") == "32")
+  }
 }

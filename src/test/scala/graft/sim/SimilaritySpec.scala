@@ -94,6 +94,101 @@ class SimilaritySpec extends SparkSpec {
     assert(reparted == want)
   }
 
+  private def topk(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Int)] =
+    df.collect().map(r => (r.getAs[Number](0).longValue, r.getLong(1), r.getDouble(2),
+      r.getInt(3))).toSet
+
+  test("kernel edge cases: ties by id, k past the corpus, float and double, 1 and 13 parts") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(99)
+    val dim = 8
+    val fresh = (0 until 30).map(i => (i.toLong, Array.fill(dim)(rnd.nextFloat() - 0.5f)))
+    // ids 40, 33 and 47 carry the SAME vector as id 3: against any other
+    // query their cosines are equal, so they rank by ascending id
+    val dups = Seq(40L, 33L, 47L).map(id => (id, fresh(3)._2.clone()))
+    val vecs = fresh ++ dups
+    val labels = vecs.map { case (id, _) => id -> (id % 3).toInt }.toMap
+    val floats = vecs.map { case (id, v) => (id, v, labels(id)) }
+      .toDF("vec_id", "embedding", "label")
+    val doubles = vecs.map { case (id, v) => (id, v.map(_.toDouble), labels(id)) }
+      .toDF("vec_id", "embedding", "label")
+    val got = topk(Similarity.knnJoinExact(floats, k = 5))
+    assert(got == topk(Similarity.bruteForceTopK(floats, floats, k = 5)))
+    // every query but 3 and its copies sees the four copies tie
+    val tieSizes = for (q <- 0L until 30L if q != 3L) yield {
+      val tied = got.filter(r => r._1 == q && Set(3L, 33L, 40L, 47L)(r._2)).toSeq.sortBy(_._4)
+      assert(tied.map(_._3).distinct.size <= 1, s"q=$q: $tied")
+      assert(tied.map(_._2) == Seq(3L, 33L, 40L, 47L).take(tied.size),
+        s"q=$q: ties out of id order: $tied")
+      tied.size
+    }
+    assert(tieSizes.max >= 2, "no query saw the tie")
+    val q3 = got.filter(_._1 == 3L).toSeq.sortBy(_._4)
+    assert(q3.take(3).map(_._2) == Seq(33L, 40L, 47L), s"copies of 3 rank by id: $q3")
+    // array<double> widened from the same floats scores bit-identically
+    assert(topk(Similarity.knnJoinExact(doubles, k = 5)) == got)
+    // k at and past corpus size - 1: every other vector, ranked once
+    val n = vecs.size
+    for (k <- Seq(n - 1, n, 10 * n)) {
+      val all = topk(Similarity.knnJoinExact(floats, k = k))
+      assert(all.size == n * (n - 1), s"k=$k")
+      assert(all == topk(Similarity.bruteForceTopK(floats, floats, k = k)), s"k=$k")
+    }
+    // partition-invariant, labelled or not
+    val queries = doubles.filter(col("vec_id") % 4 === 0)
+    val hn = topk(Similarity.hardNegatives(doubles, queries, k = 4))
+    assert(hn.nonEmpty && hn.forall(r => labels(r._1) != labels(r._2)))
+    for (parts <- Seq(1, 13)) {
+      assert(topk(Similarity.knnJoinExact(floats.repartition(parts), k = 5)) == got,
+        s"parts=$parts")
+      assert(topk(Similarity.hardNegatives(doubles.repartition(parts),
+        queries.repartition(parts), k = 4)) == hn, s"parts=$parts")
+    }
+  }
+
+  test("kernel keeps the results pinned for a zero vector, a NULL element, a dimension mismatch") {
+    import spark.implicits._
+    // pinned on the pair-join formulation this kernel replaced: a NULL
+    // cosine ranked as 0.0, and a zero-norm pair failed under ANSI
+    def corpus(v4: Option[Float]*) = Seq(
+        (1L, Seq(Some(1.0f), Some(0.0f), Some(0.0f)), 0),
+        (2L, Seq(Some(0.0f), Some(1.0f), Some(0.0f)), 1),
+        (3L, Seq(Some(1.0f), Some(1.0f), Some(0.0f)), 1),
+        (4L, v4, 0))
+      .toDF("vec_id", "embedding", "label")
+    val c = 0.7071067811865475
+    val knn = Set((1L, 2L, 0.0, 2), (1L, 3L, c, 1), (1L, 4L, 0.0, 3),
+      (2L, 1L, 0.0, 2), (2L, 3L, c, 1), (2L, 4L, 0.0, 3),
+      (3L, 1L, c, 1), (3L, 2L, c, 2), (3L, 4L, 0.0, 3),
+      (4L, 1L, 0.0, 1), (4L, 2L, 0.0, 2), (4L, 3L, 0.0, 3))
+    val hn = Set((1L, 2L, 0.0, 2), (1L, 3L, c, 1), (2L, 1L, 0.0, 1), (2L, 4L, 0.0, 2),
+      (3L, 1L, c, 1), (3L, 4L, 0.0, 2), (4L, 2L, 0.0, 1), (4L, 3L, 0.0, 2))
+    for (v4 <- Seq(Seq(Some(1.0f), None, Some(0.0f)), Seq(Some(1.0f), Some(0.5f)))) {
+      val df = corpus(v4: _*)
+      assert(topk(Similarity.knnJoinExact(df, k = 5)) == knn, v4)
+      assert(topk(Similarity.hardNegatives(df, df, k = 5)) == hn, v4)
+    }
+    val zero = corpus(Some(0.0f), Some(0.0f), Some(0.0f))
+    def divideByZero(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")), e)
+    }
+    divideByZero(Similarity.knnJoinExact(zero, k = 5).collect())
+    divideByZero(Similarity.hardNegatives(zero, zero, k = 5).collect())
+    // a zero vector sharing the query's label is never scored
+    assert(topk(Similarity.hardNegatives(zero, zero.filter(col("vec_id") === 1), k = 5)) ==
+      Set((1L, 2L, 0.0, 2), (1L, 3L, c, 1)))
+  }
+
+  test("a repeated corpus id is refused") {
+    import spark.implicits._
+    val df = Seq((1L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)), (2L, Array(1.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](Similarity.knnJoinExact(df, k = 2))
+    assert(e.getMessage.contains("vec_id 1 is not unique"), e.getMessage)
+  }
+
   test("TopKByScore: bounded buffer, deterministic ties, merge associativity") {
     val agg = new Similarity.TopKByScore(3)
     // (0.9, 2L) is observed TWICE: identical (score, id) observations
