@@ -56,7 +56,7 @@ object Graph {
 
   /** Iteration-state checkpointing for the big-edge-list loops below —
     * the measured rationale (both sf10 failure modes) lives on
-    * [[IterState]], which dupGroups' min-label propagation shares.
+    * [[IterState]].
     */
   private def ckptSer(df: DataFrame): DataFrame = IterState.ckptSer(df)
 
@@ -90,11 +90,10 @@ object Graph {
     * Spark's `div` and DuckDB's `//` agree). Dangling-node mass is
     * dropped each round — a defined semantics, not an approximation
     * accident. `iters` fixed rounds of: join ranks onto the aggregated
-    * edge list, integer-sum per destination — the same bounded-state loop
-    * shape as `Dedup.dupGroups`' label propagation. The iteration state
-    * is |V| rows regardless of how much data produced the edges; for
-    * graphs where |V| itself is huge, checkpoint every few rounds exactly
-    * as `dupGroups` does (here the plans stay tiny: |V| ≤ |event types|).
+    * edge list, integer-sum per destination. The iteration state is |V|
+    * rows regardless of how much data produced the edges, and each
+    * round's ranks are checkpointed so the plan does not deepen (here
+    * the plans stay tiny: |V| ≤ |event types|).
     */
   /** One event of the streaming transition form. */
   final case class Ev(user_id: Long, ts: java.sql.Timestamp, event_id: Long,
@@ -618,8 +617,8 @@ object Graph {
     *
     * Scale shape: each round is one map-side-combined degree aggregation
     * + two IDs-only semi joins on the shrinking edge list, checkpointed
-    * per round so plan depth stays constant (the [[pageRank]] /
-    * `Dedup.dupGroups` discipline). Rounds are a fixed small constant;
+    * per round so plan depth stays constant (the [[pageRank]]
+    * discipline). Rounds are a fixed small constant;
     * each round's cost is bounded by the CURRENT edge count, which only
     * shrinks. Checkpoint state is the CANONICAL edge list in SERIALIZED
     * storage with the superseded round freed as soon as its successor

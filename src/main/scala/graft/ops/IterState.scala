@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Iteration-state checkpointing for driver-side loops (k-core peels,
-  * min-label propagation, PageRank/LPA rounds): eager local checkpoints
+  * PageRank/LPA rounds): eager local checkpoints
   * in serialized, DISK-ONLY storage, freed explicitly the moment a
   * round's successor materializes.
   *
@@ -17,9 +17,9 @@ import org.apache.spark.storage.StorageLevel
   *     break #4);
   *   - memory-resident serialized blocks instead held the storage region
   *     at its protected floor and starved every aggregation hash map
-  *     down to [AGGREGATE_OUT_OF_MEMORY] (kCore at sf10; dupGroups
-  *     reproduced the identical signature on the same fixture the first
-  *     time the sf10 sweep reached `doc_leakproof_split`). Iteration
+  *     down to [AGGREGATE_OUT_OF_MEMORY] (kCore at sf10; the former
+  *     min-label loop of `Dedup.dupGroups` reproduced the identical
+  *     signature on the same fixture). Iteration
   *     state is scanned O(1) times per round, so it has no business
   *     competing with execution memory at all: DISK_ONLY keeps the
   *     unified region wholly for joins/aggregations, and a sequential

@@ -263,8 +263,8 @@ object CorpusQueries {
 
   /** Materialized transitive dup-group labels over [[jaccardPairGraph]] —
     * shared by `doc_dup_groups` (emits it) and `doc_dup_survivors` (window
-    * argmax over it). The iterative CC is deterministic (min-label fixed
-    * point), so the store is row-identical to a fresh run.
+    * argmax over it). The union-find CC is deterministic (component min
+    * id), so the store is row-identical to a fresh run.
     */
   private def dupGroupLabels(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
@@ -1632,8 +1632,8 @@ object CorpusQueries {
     // Transitive duplicate GROUPS: connected components over the exact
     // near-dup pair graph, labels = min doc_id per component (the
     // canonical-survivor step a real dedup pipeline runs after pair
-    // generation — near-dup is not transitive). Spark side: iterative
-    // min-label propagation; oracle: recursive-CTE transitive closure
+    // generation — near-dup is not transitive). Spark side: one union-find
+    // pass ([[Dedup.dupGroups]]); oracle: recursive-CTE transitive closure
     // over the identical pair set.
     Q("doc_dup_groups",
       """WITH RECURSIVE d AS (SELECT doc_id, lang, source,
@@ -3294,7 +3294,7 @@ object CorpusQueries {
     // vec_id per component — one row per corpus vector, group_id the
     // canonical survivor to keep. Same planted-duplicate corpus as
     // `emb_dup_pairs_tight` (each planted vector must land in its source's
-    // group), same min-label CC engine as `doc_dup_groups`, recursive-CTE
+    // group), same `dupGroups` CC engine as `doc_dup_groups`, recursive-CTE
     // closure oracle over the identical pair set.
     Q("emb_dup_groups", embSimhashGroupsSql(nPlanes = 36, dim = 64,
         maxHamming = 2, seed = 7L, corpusSql = plantedCorpusSql)) { (s, dir) =>
@@ -3707,7 +3707,7 @@ object CorpusQueries {
         .orderBy(col("a_id"), col("b_id"))
     },
 
-    // Dup-graph family: pair generation + iterative min-label connected
+    // Dup-graph family: pair generation + union-find connected
     // components on the subset; oracle = recursive-CTE closure, one row
     // per subset document.
     Q("doc_dup_groups_sub",

@@ -1327,29 +1327,6 @@ object Dedup {
         (col("n_hit") / col("n_grams")).as("contamination"))
   }
 
-  /** Transitive duplicate groups: connected components over a near-dup
-    * pair graph, each document labeled with the smallest `doc_id` in its
-    * component (the canonical survivor real dedup pipelines keep —
-    * pairwise near-dup is not transitive, so clustering must close over
-    * the pair relation, or A≈B≈C keeps both A and C).
-    *
-    * Iterative min-label propagation: every round each node takes the min
-    * of its own label and its neighbors' — one shuffle join + one min
-    * aggregation per round, converging in O(component diameter) rounds
-    * (near-dup components are shallow: diameter ≲ chain length of edits).
-    * Label state is one (id, label) row per document; `localCheckpoint`
-    * truncates the growing plan lineage each round. The driver-side loop
-    * only ever compares one Boolean per round (`changed`), never data.
-    *
-    * The convergence check rides the propagation pass: each node's
-    * PREVIOUS label travels through the min-aggregation as a null-padded
-    * side column (`min` ignores nulls, and only the self row carries it),
-    * so "did anything change" is a filter over the round's checkpointed
-    * output — one shuffle job per round total, not propagation + a second
-    * join-shaped check. (Large-star/small-star would cut ROUNDS to
-    * O(log n); near-dup components are chain-shallow, so fewer jobs per
-    * round is worth more than fewer rounds here.)
-    */
   /** LEAKAGE-PROOF corpus split: train/val/test assignment that is
     * coherent by NEAR-DUP GROUP, not by document — the eval-integrity
     * op naive per-doc hash splits get wrong (a near-duplicate of a
@@ -1377,90 +1354,84 @@ object Dedup {
       .select(col(idCol), col("group_id"), col("split"))
   }
 
+  /** Transitive duplicate groups: connected components over a near-dup
+    * pair graph, each document labeled with the smallest id in its
+    * component (the canonical survivor real dedup pipelines keep —
+    * pairwise near-dup is not transitive, so clustering must close over
+    * the pair relation, or A≈B≈C keeps both A and C).
+    *
+    * One exact union-find pass, whatever the component diameter: each
+    * partition of the edge list folds into a [[MinUnionFind]], the
+    * partitions merge through `treeAggregate` (one Spark job), and the
+    * driver flattens the result to one (id, label) row per frontier
+    * vertex. Only vertices that HAVE edges carry a label; every other
+    * document is its own group through the final left join. Pairs with a
+    * NULL id connect nothing (an equi-join never matches NULL).
+    *
+    * The labels join back as a broadcast local frame, so the driver holds
+    * one map entry per frontier vertex (~500 k at sf10, tens of MB).
+    * Above the broadcast budget, priced as a hash relation of 16-byte
+    * rows ([[graft.ops.ExchangeSizing.hashedRelationBytes]]), it fails
+    * with the vertex count.
+    */
   def dupGroups(docs: DataFrame, pairs: DataFrame,
-                idCol: String = "doc_id", maxIters: Int = 20): DataFrame = {
-    // Materialize the edge list ONCE: `pairs` is typically the full
-    // candidate-generation pipeline, and the loop below references edges
-    // in every round plus every convergence check — without this the
-    // near-dup join would re-execute O(rounds·2) times. DISK_ONLY
-    // serialized storage ([[graft.ops.IterState]]): at the sf10 ladder
-    // point the symmetrized list is 782 M rows, and the default
-    // deserialized level's memory-resident blocks held the storage
-    // region at its protected floor and starved the round's min-label
-    // aggregation hash maps into UNABLE_TO_ACQUIRE_MEMORY — the exact
-    // kCore failure signature (SCALE.md round 13), found when the sf10
-    // sweep first reached doc_leakproof_split.
-    val edges = graft.ops.IterState.ckptSer(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
-    // Propagate only over nodes that HAVE edges — the frontier is the
-    // component subgraph, not the corpus; untouched documents are
-    // singletons and join back once at the end. (Near-dup graphs are
-    // sparse: most of a deduplicated corpus participates in no pair.)
-    var labels = graft.ops.IterState.ckptSer(
-      edges.select(col("src").as("id"))
-        .distinct().withColumn("label", col("id")))
-    // One (id, label) row per frontier vertex — almost always
-    // broadcastable, and the planner cannot see that through the
-    // checkpoint's default stats: without the hint every round
-    // sort-merge-joins the full edge list (782 M rows × rounds at sf10).
-    // The frontier never grows, so one census prices every round; above
-    // the budget (planetary vertex counts) rounds fall back to the
-    // shuffled join. Priced as a HASH RELATION (16 raw bytes of id +
-    // label through ExchangeSizing.hashedRelationBytes), not raw field
-    // bytes — the per-row relation overhead is 2–4× for rows this
-    // narrow (ADVICE r13). Residual GC dependence: each round builds a
-    // FRESH relation that the ContextCleaner reclaims only when the
-    // superseded plan's references are GC'd — unlike the checkpoint
-    // blocks freed deterministically below, up to a few rounds' budget
-    // can briefly coexist; the budget (a fifth of heap) is sized so
-    // even 2–3 live relations plus storage never crowd execution
-    // memory, and the hint API offers no deterministic destroy.
-    val frontier = labels.count()
-    val bcastLabels = graft.ops.ExchangeSizing.hashedRelationBytes(
-        frontier, 16) <=
-      graft.ops.ExchangeSizing.broadcastBudgetBytes(docs.sparkSession)
-    def labelSide(df: DataFrame): DataFrame =
-      if (bcastLabels) broadcast(df) else df
-    val labelType = labels.schema("label").dataType
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val viaNeighbors = edges
-        .join(labelSide(labels), edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"),
-          lit(null).cast(labelType).as("prev"))
-      val self = labels.select(col("id"), col("label"),
-        col("label").as("prev"))
-      // LAZY checkpoint: the convergence probe below is the round's
-      // materializing action — one job per round instead of an eager
-      // checkpoint job followed by a block-scan probe job (round-16;
-      // the loop's wall was ~2/3 job-launch latency at the driver's
-      // bench scale). doCheckpoint completes any partitions the
-      // isEmpty early-exit skipped before the action returns.
-      val next = graft.ops.IterState.ckptSerLazy(
-        self.union(viaNeighbors)
-          .groupBy("id").agg(min("label").as("label"), min("prev").as("prev")))
-      converged = next.filter(col("label") < col("prev")).isEmpty
-      // next is now fully materialized and truncated: the superseded
-      // round's blocks are freed deterministically (waiting for the
-      // ContextCleaner let rounds accumulate on disk at the third
-      // decade) — and only NOW, a truncated checkpoint cannot be
-      // recomputed once unpersisted.
-      graft.ops.IterState.freeCkpt(labels)
-      labels = next.select("id", "label")
-      iter += 1
-    }
-    graft.ops.IterState.freeCkpt(edges)
-    // Silent partial propagation would emit WRONG groups — fail loudly.
-    // (min-label converges in O(eccentricity of the min node); 20 rounds
-    // covers any realistic near-dup component — an edit chain of 20+
-    // documents each similar only to its neighbors would exceed it.)
-    if (!converged) throw new IllegalStateException(
-      s"dupGroups did not converge within $maxIters rounds — raise maxIters")
+                idCol: String = "doc_id"): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val labels = pairs
+      .where(col("a_id").isNotNull && col("b_id").isNotNull)
+      .select(col("a_id").cast("long"), col("b_id").cast("long"))
+      .rdd.treeAggregate(new MinUnionFind)(
+        (uf, r) => uf.union(r.getLong(0), r.getLong(1)), _ merge _)
+      .labels
+    val budget = graft.ops.ExchangeSizing.broadcastBudgetBytes(spark)
+    if (graft.ops.ExchangeSizing.hashedRelationBytes(labels.length, 16) > budget)
+      throw new IllegalStateException(s"dupGroups: ${labels.length} " +
+        s"labelled vertices exceed the $budget-byte broadcast budget")
+    val idType = docs.schema(idCol).dataType
+    val byId = broadcast(labels.toSeq.toDF("id", "label")
+      .select(col("id").cast(idType).as("id"),
+        col("label").cast(idType).as("label")))
     docs.select(col(idCol))
-      .join(labels, docs(idCol) === labels("id"), "left")
+      .join(byId, docs(idCol) === byId("id"), "left")
       .select(col(idCol), coalesce(col("label"), col(idCol)).as("group_id"))
+  }
+
+  /** Union-find whose every root is the minimum id of its set: a union
+    * hangs the larger root under the smaller, so `find` returns the
+    * component's min label. Path halving keeps finds near-constant.
+    */
+  private final class MinUnionFind extends Serializable {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+    private def find(v: Long): Long = {
+      var x = v
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val up = parent(p)
+        parent(x) = up
+        x = up
+        p = parent(x)
+      }
+      x
+    }
+
+    def union(a: Long, b: Long): MinUnionFind = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      this
+    }
+
+    /** Folds `o` in: its sets are exactly the closure of its parent links. */
+    def merge(o: MinUnionFind): MinUnionFind = {
+      o.parent.foreachEntry((v, p) => union(v, p))
+      this
+    }
+
+    /** (vertex, min id of its component) for every vertex seen. */
+    def labels: Array[(Long, Long)] =
+      parent.keysIterator.toArray.map(v => (v, find(v)))
   }
 
   /** Quality-aware survivor selection over [[dupGroups]] output: per

@@ -435,6 +435,119 @@ class DedupSpec extends SparkSpec {
     assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 1L))
   }
 
+  /** (id, group_id) rows of [[Dedup.dupGroups]] over long-id frames. */
+  private def groupsOf(ids: Seq[Long], pairs: Seq[(Long, Long)]) = {
+    import spark.implicits._
+    Dedup.dupGroups(ids.toDF("doc_id"), pairs.toDF("a_id", "b_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("dupGroups labels a 30-document edit chain as one min-id group") {
+    import spark.implicits._
+    // doc k is the 16-token window t_k..t_{k+15}: neighbours share 15 of 17
+    // tokens (J ≈ 0.88), docs two edits apart 14 of 18 (J ≈ 0.78 < 0.8), so
+    // only the closure over 29 links joins the ends. The minimum id heads
+    // the chain, 29 links from its far end; the other ids are shuffled.
+    val ids = 1L :: new scala.util.Random(7).shuffle((2L to 30L).toList)
+    val docs = ids.zipWithIndex.map { case (id, k) =>
+      id -> (k until k + 16).map(t => f"t$t%02d").mkString(" ")
+    }.toDF("doc_id", "text").withColumn("blk", lit("g"))
+    val pairs = Dedup.jaccardPairs(docs, Seq("blk"), threshold = 0.8)
+    assert(pairs.count() == 29)
+    val groups = Dedup.dupGroups(docs, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(groups == ids.map(_ -> 1L).toMap)
+  }
+
+  test("dupGroups keeps Int ids Int in group_id") {
+    import spark.implicits._
+    val out = Dedup.dupGroups(Seq(1, 2, 3, 4).toDF("doc_id"),
+      Seq((4, 2)).toDF("a_id", "b_id"))
+    assert(out.schema("group_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 2, 3 -> 3, 4 -> 2))
+  }
+
+  test("dupGroups: NULL ids, self-pairs, repeated and reversed pairs") {
+    import spark.implicits._
+    val docs = Seq(Some(1L), Some(2L), Some(3L), Some(4L), Some(5L), Some(6L),
+      Some(7L), None).toDF("doc_id")
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (None, None), (Some(3L), Some(3L)),
+      (Some(5L), Some(4L)), (Some(4L), Some(5L)), (Some(5L), Some(4L)),
+      (Some(6L), Some(5L))).toDF("a_id", "b_id")
+    val got = Dedup.dupGroups(docs, pairs).collect()
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toSet
+    assert(got == Set[(Option[Any], Option[Any])](
+      Some(1L) -> Some(1L), Some(2L) -> Some(2L), Some(3L) -> Some(3L),
+      Some(4L) -> Some(4L), Some(5L) -> Some(4L), Some(6L) -> Some(4L),
+      Some(7L) -> Some(7L), None -> None))
+  }
+
+  test("dupGroups over an empty pair frame leaves every document alone") {
+    assert(groupsOf(Seq(3L, 1L, 2L), Nil) == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("dupGroups rows do not depend on the pairs' partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020)
+    val ids = (1L to 200L)
+    val pairs = Seq.fill(150)((1L + rnd.nextInt(200), 1L + rnd.nextInt(200)))
+    // reference closure: relabel every vertex with its component's min
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    def component(v: Long): Set[Long] = Iterator.iterate((Set(v), Set(v))) {
+      case (seen, frontier) =>
+        val next = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+        (seen ++ next, next)
+    }.dropWhile(_._2.nonEmpty).next()._1
+    val expected = ids.map(v => v -> component(v).min).toMap
+    Seq(1, 13).foreach { parts =>
+      val got = Dedup.dupGroups(ids.toDF("doc_id"),
+          pairs.toDF("a_id", "b_id").repartition(parts))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, s"$parts partitions")
+    }
+  }
+
+  test("dupGroups runs the same few Spark jobs whatever the chain length") {
+    def jobsFor(n: Long): Int = {
+      val chain = (1L until n).map(i => (i, i + 1))
+      val sc = spark.sparkContext
+      val group = s"dupGroups-jobs-$n"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val p = e.properties
+          if (p != null && p.getProperty("spark.jobGroup.id") == group) {
+            if (p.getProperty("spark.job.description") == "end") done.countDown()
+            else jobs.incrementAndGet()
+          }
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, null)
+        assert(groupsOf(1L to n, chain) == (1L to n).map(_ -> 1L).toMap)
+        // listener events arrive in order: once this job is seen, every
+        // job dupGroups started has been counted
+        sc.setJobDescription("end")
+        sc.parallelize(Seq(1), 1).count()
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+    val short = jobsFor(3)
+    val long = jobsFor(30)
+    assert(short == long && long >= 1 && long <= 3,
+      s"3-chain: $short jobs, 30-chain: $long")
+  }
+
   test("prefix-filter losslessness holds on randomized corpora (property)") {
     // the fixture-equality test pins one dataset; this sweeps seeded random
     // corpora with duplicate-heavy small vocabularies (the hardest case for
