@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark: every registered query at SPARK_GRAFT_SF_DIR.
   *
   * Variance-proof protocol (round 5):
@@ -81,14 +79,7 @@ object Bench {
     // readings come after the in-JVM build phase and self-report the
     // bench's own 32-core work, ~3–9 depending on scale).
     val preLaunchLoad = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Main.session(s"local[$cpus]", cpus.toInt)
 
     def materialize(name: String): Double = {
       val t0 = System.nanoTime()

@@ -77,7 +77,10 @@ object ExchangeSizing {
 
   /** Build rows one task's hash map can hold at `bytesPerRow`. */
   def rowsPerMap(spark: SparkSession, bytesPerRow: Int): Long =
-    math.max(1L, perTaskBudgetBytes(spark) / math.max(1, bytesPerRow))
+    rowsPerMap(perTaskBudgetBytes(spark), bytesPerRow)
+
+  def rowsPerMap(budgetBytes: Long, bytesPerRow: Int): Long =
+    math.max(1L, budgetBytes / math.max(1, bytesPerRow))
 
   /** Partition count for a non-spilling shuffled-hash build of
     * `estBuildRows` rows at ~`bytesPerRow` each; 0 = "the default
@@ -92,9 +95,18 @@ object ExchangeSizing {
     * OOM.
     */
   def shjBuildParts(spark: SparkSession, estBuildRows: Long,
-                    bytesPerRow: Int, gateSlack: Double = 1.0): Int = {
-    val rpm = rowsPerMap(spark, bytesPerRow)
-    val layout = spark.sessionState.conf.numShufflePartitions
+                    bytesPerRow: Int, gateSlack: Double = 1.0): Int =
+    shjBuildParts(perTaskBudgetBytes(spark),
+      spark.sessionState.conf.numShufflePartitions, estBuildRows,
+      bytesPerRow, gateSlack)
+
+  /** The pure gate arithmetic behind the session overload, at a given
+    * per-task budget and default shuffle layout — so the spec can pin
+    * the gate at the deployment parameters whatever the test heap.
+    */
+  def shjBuildParts(budgetBytes: Long, layout: Int, estBuildRows: Long,
+                    bytesPerRow: Int, gateSlack: Double): Int = {
+    val rpm = rowsPerMap(budgetBytes, bytesPerRow)
     if (estBuildRows <= (gateSlack * layout * rpm).toLong) 0
     else math.min(MaxParts, estBuildRows / rpm + 1).toInt
   }

@@ -243,17 +243,4 @@ object Pipelines {
         col("v_ts") <= col("p_ts") &&
         col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowSec SECONDS"))
   }
-
-  /** R1/R2 fidelity hints: the reference round-robin-repartitions before
-    * the page-view agg (`stream_processor.py:134`) and hash-repartitions
-    * by session before the session agg (`:180`). Both force an extra full
-    * shuffle of unaggregated rows that the aggregation's own exchange
-    * makes redundant — off by default, available for exact plan fidelity.
-    */
-  def withReferenceRepartitioning(events: DataFrame,
-                                  pageViewPartitions: Int = 10): DataFrame =
-    events.repartition(pageViewPartitions)
-
-  def repartitionBySession(events: DataFrame): DataFrame =
-    events.repartition(col("session_id"))
 }

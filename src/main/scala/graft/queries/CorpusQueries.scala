@@ -1488,7 +1488,7 @@ object CorpusQueries {
     // witness bound, lossless) plus positional container-index
     // truncation cut that to 1.06M candidates (16.3 per result,
     // 21.7× fewer; 25.8 → 12.4 s at sf1) — see
-    // Dedup.containmentCandidates. The twin keeps the regime measured
+    // Dedup.containmentCandidatesAB. The twin keeps the regime measured
     // honestly under an oracle every round. Unblocked (the Zipf
     // corpus carries no lang/source).
     Q("doc_containment_pairs_zipf",

@@ -30,29 +30,43 @@ import graft.source.{ClickstreamSource, KafkaSourceConfig}
   */
 object Main {
 
-  /** The entrypoint session's settings. Spark caches generated classes
-    * under (class loader, source) in a cache of
+  /** The settings every session this repo's mains build shares. Spark
+    * caches generated classes under (class loader, source) in a cache of
     * `spark.sql.codegen.cache.maxEntries` entries, 100 by default, and
     * that setting is static: only the code that builds the session can
     * raise it. The clickstream queries alone hold about 150 keys, since
     * each streaming query's cloned session gets its own class loader, so
     * at 100 entries every phase recompiles classes it compiled before.
     */
-  def sessionConf(cfg: GraftConfig): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> cfg.shufflePartitions.toString,
+  def sessionConf(shufflePartitions: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.ui.enabled" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> "2000")
 
-  def main(args: Array[String]): Unit = {
-    val cfg = GraftConfig.fromEnv()
+  def sessionConf(cfg: GraftConfig): Map[String, String] =
+    sessionConf(cfg.shufflePartitions)
+
+  /** The one session builder of every main — the entrypoint, `Bench`,
+    * `Verify` and the tools: [[sessionConf]] at `shufflePartitions`,
+    * with `overrides` replacing single settings, logging at WARN.
+    */
+  def session(master: String, shufflePartitions: Int,
+              overrides: (String, String)*): SparkSession = {
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-clickstream")
-      .config(sessionConf(cfg))
+      .master(master)
+      .appName("graft")
+      .config(sessionConf(shufflePartitions) ++ overrides)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cfg = GraftConfig.fromEnv()
+    val spark = session(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+      cfg.shufflePartitions)
 
     val checkpoint = cfg.checkpointDir.getOrElse(
       Files.createTempDirectory("graft-checkpoints").toString)

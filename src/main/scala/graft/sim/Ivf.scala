@@ -648,7 +648,7 @@ object Ivf {
     * respect the per-task bound, an unbounded straggler (and, past
     * ~2 GB of collected vectors, a hard crash) when a cell goes
     * pathological. The guard is a census gate, the
-    * [[graft.text.Dedup]] `hotGridParts` idiom: cell populations are
+    * [[graft.ops.Skew]] `hotGridParts` idiom: cell populations are
     * one cheap map-side-combined aggregate (≤ k rows to the driver);
     * cells ≤ `hotCellCap` keep the one-task plan byte-identical, and
     * each hot cell is GRID-SALTED across G = ⌈pop/cap⌉ ≤

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashExpressions, VectorExpressions}
+import graft.ops.Skew
 
 /** Corpus deduplication at scale: exact, MinHash+LSH, SimHash, and n-gram
   * Jaccard. All candidate generation is *bucketed* (band/chunk join) so the
@@ -304,13 +305,12 @@ object Dedup {
     * compared; band count tunes the recall/cost curve (match probability
     * ≈ 1-(1-s^r)^b for Jaccard s).
     *
-    * Hot-bucket safety (same grid treatment as [[prefixCandidates]] /
-    * [[simhashPairs]]): a boilerplate-heavy corpus — near-identical
-    * documents that survive exact dedup — collides in EVERY band, putting
-    * an N² cell on one reduce task. Band buckets above `hotBucketCap`
-    * occurrences go through the lossless grid-salted self-join: row with
-    * group g is replicated to cells (g,·)/(·,g), every pair meets in
-    * exactly one cell, the same candidate multiset spreads over G² tasks.
+    * Hot-bucket safety ([[graft.ops.Skew.gridJoin]], like every pair
+    * kernel): a boilerplate-heavy corpus — near-identical documents that
+    * survive exact dedup — collides in EVERY band, putting an N² cell on
+    * one reduce task. Band buckets above `hotBucketCap` occurrences go
+    * through the lossless grid-salted self-join, which spreads the same
+    * candidate multiset over G² tasks.
     *
     * Verify ordering differs from [[simhashPairs]] DELIBERATELY: there the
     * verify inputs (the two 64-bit signatures) already ride the bucket
@@ -346,19 +346,7 @@ object Dedup {
         .as("bh"))
     val cand = bucketSelfJoin(buckets, hotBucketCap)
       .dropDuplicates("a_id", "b_id")
-    // Corpus-sized shingle payload: shuffle-join it back by id — its
-    // parquet-bytes estimate is tiny, so the planner would otherwise
-    // build a corpus-proportional broadcast (see prefixJaccardPairs).
-    def side(role: String): DataFrame = sigs
-      .select(col("id").as(s"${role}_id"), col("sh").as(s"${role}_sh"),
-        size(col("sh")).as(s"${role}_n"))
-      .hint("SHUFFLE_HASH")
-    cand
-      .join(side("a"), "a_id").join(side("b"), "b_id")
-      .withColumn("inter", size(array_intersect(col("a_sh"), col("b_sh"))))
-      .select(col("a_id"), col("b_id"),
-        (col("inter") / (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(cand, sigs, threshold)
   }
 
   /** Candidate (a_id, b_id) multiset for [[minhashPairs]] — the band
@@ -385,40 +373,17 @@ object Dedup {
     * `(a_id, b_id)` multiset (a_id < b_id) of rows sharing a bucket.
     * `bh` may be any equatable type (long band hashes, string band
     * tuples). Shared by the MinHash configs; see [[minhashPairs]] for
-    * the hot-bucket rationale.
+    * the hot-bucket rationale and [[graft.ops.Skew.gridJoin]] for the
+    * grid.
     */
   private[text] def bucketSelfJoin(buckets: DataFrame,
-                                   hotBucketCap: Int): DataFrame = {
+                                   hotBucketCap: Int): DataFrame =
     // corpus-proportional exploded index: never broadcastable (see
     // prefixCandidates)
-    val a = buckets.toDF("a_id", "bh").hint("SHUFFLE_HASH")
-    val b = buckets.toDF("b_id", "bh")
-    // Hot buckets: band hashes shared by more than `hotBucketCap` docs.
-    // The aggregation map-side-combines to (distinct band hash) size and
-    // the driver holds at most 64 (bh, n) rows — the bounded-collect class;
-    // buckets beyond limit(64) stay on the plain join: correct, unspread.
-    val hotRows = buckets.groupBy(col("bh"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > hotBucketCap)
-      .orderBy(col("n").desc, col("bh")).limit(64).collect()
-    val joined =
-      if (hotRows.isEmpty) a.join(b, Seq("bh"))
-      else {
-        val hot: Seq[Any] = hotRows.map(_.get(0)).toSeq
-        val maxN = hotRows.map(_.getLong(1)).max
-        val grid = math.min(32L, (maxN + hotBucketCap - 1) / hotBucketCap).toInt
-        val cold = a.filter(!col("bh").isin(hot: _*))
-          .join(b.filter(!col("bh").isin(hot: _*)), Seq("bh"))
-        val aHot = a.filter(col("bh").isin(hot: _*))
-          .withColumn("g1", pmod(xxhash64(col("a_id")), lit(grid.toLong)))
-          .withColumn("g2", explode(sequence(lit(0L), lit(grid - 1L))))
-        val bHot = b.filter(col("bh").isin(hot: _*))
-          .withColumn("g2", pmod(xxhash64(col("b_id")), lit(grid.toLong)))
-          .withColumn("g1", explode(sequence(lit(0L), lit(grid - 1L))))
-        cold.unionByName(
-          aHot.join(bHot, Seq("bh", "g1", "g2")).drop("g1", "g2"))
-      }
-    joined.filter(col("a_id") < col("b_id")).select("a_id", "b_id")
-  }
+    Skew.gridJoin(buckets.toDF("a_id", "bh").hint("SHUFFLE_HASH"),
+        buckets.toDF("b_id", "bh"), Seq("bh"), col("bh"), hotBucketCap,
+        Skew.Occurrences)
+      .filter(col("a_id") < col("b_id")).select("a_id", "b_id")
 
   /** Two-sided analogue of [[bucketSelfJoin]] for the incremental probe
     * (standing index × batch): canonical candidate pairs from rows
@@ -561,7 +526,11 @@ object Dedup {
             v => v.cast("string")), ",")))).as("bh"))
   }
 
-  /** Exact shingle-Jaccard verify of an IDs-only candidate set. */
+  /** Exact shingle-Jaccard verify of an IDs-only candidate set. The
+    * corpus-sized shingle payload is shuffle-joined back by id — its
+    * parquet-bytes estimate is tiny, so the planner would otherwise
+    * build a corpus-proportional broadcast (see [[verified]]).
+    */
   private def jaccardVerify(cand: DataFrame, sigs: DataFrame,
                             threshold: Double): DataFrame = {
     def side(role: String): DataFrame = sigs
@@ -599,7 +568,7 @@ object Dedup {
     * side is salted into grid cells and the (small) batch side
     * replicates across them, so a hot standing bucket never pins all
     * its probe matches on one reduce task; the intra-batch self-join
-    * keeps [[bucketSelfJoin]]'s symmetric grid.
+    * ([[bucketSelfJoin]]) takes the symmetric [[graft.ops.Skew.gridJoin]].
     */
   def minhashPairsMd5Incremental(batch: DataFrame, existing: DataFrame,
                                  threshold: Double = 0.5,
@@ -609,16 +578,9 @@ object Dedup {
                                  hotBucketCap: Int = 100000): DataFrame = {
     // both sig frames feed ≥ 3 jobs each (the two hot-detection
     // collects, the probe/self joins, the verify) and md5-per-shingle
-    // dominates — ONE tagged-union kernel pass and checkpoint instead of
-    // one per side (the sides are disjoint, so the batch flag recovers
-    // each exactly; the two eager checkpoints ran serialized); at
-    // warehouse scale the standing side is a persisted signature table
-    // and this is its in-session stand-in (the containment-incremental
-    // rationale)
-    val tagged = batch.withColumn("__batch", lit(true))
-      .unionByName(existing.withColumn("__batch", lit(false)))
-    val sigsAll = md5ShingleSigs(tagged, numHashes, bands, shingleW, textCol,
-      idCol, Seq("__batch")).localCheckpoint()
+    // dominates — one tagged kernel pass and checkpoint (see tagBatch)
+    val sigsAll = md5ShingleSigs(tagBatch(batch, existing), numHashes, bands,
+      shingleW, textCol, idCol, Seq("__batch")).localCheckpoint()
     val sigsOld = sigsAll.filter(!col("__batch")).drop("__batch")
     val sigsNew = sigsAll.filter(col("__batch")).drop("__batch")
     val oldB = md5BandBuckets(sigsOld, numHashes, bands)
@@ -639,14 +601,13 @@ object Dedup {
     * within Hamming distance 3 shares at least one of 4 chunks), verify
     * with `bit_count(xor) <= maxHamming`.
     *
-    * Hot-bucket safety (same grid treatment as [[prefixCandidates]]):
-    * SimHash signatures CONCENTRATE on corpora whose token-frequency
-    * profiles repeat — measured on the 30-token fixture vocabulary AND on
-    * Zipf text, single 16-bit buckets can hold thousands of documents,
-    * pinning an N² cell on one reduce task. Buckets above `hotBucketCap`
-    * occurrences go through the lossless grid-salted self-join: row with
-    * group g is replicated to cells (g,·)/(·,g), every pair meets in
-    * exactly one cell, the same candidate set spreads over G² tasks.
+    * Hot-bucket safety ([[graft.ops.Skew.gridJoin]]): SimHash signatures
+    * CONCENTRATE on corpora whose token-frequency profiles repeat —
+    * measured on the 30-token fixture vocabulary AND on Zipf text,
+    * single 16-bit buckets can hold thousands of documents, pinning an
+    * N² cell on one reduce task. Buckets above `hotBucketCap`
+    * occurrences go through the lossless grid-salted self-join, which
+    * spreads the same candidate set over G² tasks.
     * The Hamming verify runs BEFORE the pair dedup, so the dedup shuffle
     * carries only verified pairs.
     */
@@ -671,7 +632,7 @@ object Dedup {
     * chunk value) and verifying `bit_count(xor) ≤ maxHamming` finds
     * exactly the qualifying pairs. Shared by the production xxhash64
     * config ([[simhashPairs]]) and the oracle-replayable md5 config
-    * ([[simhashPairsMd5]]); hot-bucket grid salting as documented on
+    * ([[simhashPairsMd5]]); hot buckets are grid-salted as documented on
     * [[simhashPairs]]. The pigeonhole guarantee (every qualifying pair
     * found) holds when maxHamming < chunks — the registered configs;
     * looser thresholds still verify exactly but only among chunk-mates
@@ -686,34 +647,12 @@ object Dedup {
         struct(c.as("chunk"),
           shr(col("sig"), c * chunkBits).bitwiseAND(mask).as("ch")))).as("ck"))
       .select(col("id"), col("sig"), col("ck.chunk"), col("ck.ch"))
-    val a = chunked.toDF("a_id", "a_sig", "chunk", "ch")
-    val b = chunked.toDF("b_id", "b_sig", "chunk", "ch")
-    // (chunk, ch) packs into one long: chunk ∈ [0,chunks), ch < 2^chunkBits
-    def bkey(chunkC: Column, chC: Column): Column =
-      chunkC.cast("long") * (mask + 1) + chC
-    val hotRows = chunked.groupBy(col("chunk"), col("ch"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > hotBucketCap)
-      .orderBy(col("n").desc, col("chunk"), col("ch")).limit(64).collect()
-    val joined =
-      if (hotRows.isEmpty) a.join(b, Seq("chunk", "ch"))
-      else {
-        val hotKeys = hotRows.map(r => (r.getInt(0).toLong * (mask + 1)) | r.getLong(1)).toSeq
-        val maxN = hotRows.map(_.getLong(2)).max
-        val grid = math.min(32L, (maxN + hotBucketCap - 1) / hotBucketCap).toInt
-        val aK = a.withColumn("bk", bkey(col("chunk"), col("ch")))
-        val bK = b.withColumn("bk", bkey(col("chunk"), col("ch")))
-        val cold = aK.filter(!col("bk").isin(hotKeys: _*)).drop("bk")
-          .join(bK.filter(!col("bk").isin(hotKeys: _*)).drop("bk"), Seq("chunk", "ch"))
-        val aHot = aK.filter(col("bk").isin(hotKeys: _*)).drop("bk")
-          .withColumn("g1", pmod(xxhash64(col("a_id")), lit(grid.toLong)))
-          .withColumn("g2", explode(sequence(lit(0L), lit(grid - 1L))))
-        val bHot = bK.filter(col("bk").isin(hotKeys: _*)).drop("bk")
-          .withColumn("g2", pmod(xxhash64(col("b_id")), lit(grid.toLong)))
-          .withColumn("g1", explode(sequence(lit(0L), lit(grid - 1L))))
-        cold.unionByName(
-          aHot.join(bHot, Seq("chunk", "ch", "g1", "g2")).drop("g1", "g2"))
-      }
-    joined
+    // hot buckets route on (chunk, ch) packed into one long: chunk ∈
+    // [0,chunks), ch < 2^chunkBits
+    Skew.gridJoin(chunked.toDF("a_id", "a_sig", "chunk", "ch"),
+        chunked.toDF("b_id", "b_sig", "chunk", "ch"), Seq("chunk", "ch"),
+        col("chunk").cast("long") * (mask + 1) + col("ch"), hotBucketCap,
+        Skew.Occurrences)
       .filter(col("a_id") < col("b_id"))
       .withColumn("hamming", bit_count(col("a_sig").bitwiseXOR(col("b_sig"))))
       .filter(col("hamming") <= maxHamming)
@@ -790,13 +729,10 @@ object Dedup {
     val chunks = 4; val chunkBits = 15
     val mask = (1L << chunkBits) - 1
     // per-token md5 + 60 bit-votes dominate and each side feeds multiple
-    // jobs (hot detection + joins) — ONE tagged-union kernel pass and
-    // checkpoint instead of one per side (the sides are disjoint, so the
-    // batch flag recovers each exactly; two eager checkpoints serialized)
-    val tagged = batch.withColumn("__batch", lit(true))
-      .unionByName(existing.withColumn("__batch", lit(false)))
-    val sigsAll = md5SimhashSigs(tagged, textCol, idCol, Seq("__batch"))
-      .localCheckpoint()
+    // jobs (hot detection + joins) — one tagged kernel pass and
+    // checkpoint (see tagBatch)
+    val sigsAll = md5SimhashSigs(tagBatch(batch, existing), textCol, idCol,
+      Seq("__batch")).localCheckpoint()
     val sigsOld = sigsAll.filter(!col("__batch")).drop("__batch")
     val sigsNew = sigsAll.filter(col("__batch")).drop("__batch")
     def chunked(sh: DataFrame): DataFrame = sh.select(col("id"), col("sig"),
@@ -840,41 +776,15 @@ object Dedup {
     * Scale shape: one map-side-combined df aggregation (vocabulary-sized
     * output), one bucket join over exploded PREFIX tokens only (~(1−t) of
     * all tokens), candidates carry IDs only, token arrays join back once
-    * per surviving candidate. The tokenized projection is deliberately NOT
-    * cached across its four consumers: tokenization is a narrow re-scan,
-    * whereas persisting the token arrays would pin O(corpus) payload in
-    * block storage for the query's lifetime — the wrong trade at scale.
+    * per surviving candidate. The tokenized frame is checkpointed once
+    * and read by every probe and join ([[tokenized]]).
     */
   def prefixJaccardPairs(docs: DataFrame, blockCols: Seq[String], threshold: Double,
                          textCol: String = "text", idCol: String = "doc_id",
                          commonVocab: Int = 10000,
                          hotBucketCap: Int = 100000): DataFrame = {
-    // token sets are SORTED once per document so the per-candidate verify
-    // can merge-walk (SortedIntersectSize) instead of building an
-    // intersection array per pair; PrefixTokens re-sorts by rank
-    // internally, so w's stored order is free. The tokenize+sort stage
-    // is CPU-per-row — spread a row-group-starved scan first
-    // (ScanSpread kernel floor; 12 → 9 s at sf1).
-    val din = graft.ops.ScanSpread.spread(docs.sparkSession, docs,
-      graft.ops.ScanSpread.KernelFloor)
-    // checkpoint the tokenized frame — the incremental twin's rationale
-    // applied to the full pass (see containmentScored): rank probe, hot
-    // census, candidate join and both verify join-backs all read it, and
-    // each re-ran the split/distinct/sort kernel without materialization
-    val d = din.select(
-      (col(idCol).as("id") +: blockCols.map(col)) :+
-        array_sort(array_distinct(split(col(textCol), "\\s+"))).as("w"): _*)
-      .withColumn("nw", size(col("w")))
-      .localCheckpoint()
-    val ranks = tokenRanks(d, commonVocab)
-    // spill-aware exchange sizing for the hinted SHJ joins below — one
-    // cheap aggregate over the CHECKPOINTED frame (sum(nw) is the exact
-    // exploded index volume, the incremental twin's sizing input); 0
-    // (plan unchanged) at every sf ≤ 1 scale
-    val parts = candJoinParts(docs.sparkSession, Option(
-      d.agg(sum(col("nw").cast("long"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L))
-    exactMaskFromRanks(ranks, commonVocab) match {
+    val tok = tokenized(docs, blockCols, textCol, idCol, commonVocab)
+    exactMaskFromRanks(tok.ranks, commonVocab) match {
       case mask @ Some(_) =>
         // BOUNDED-DICTIONARY FAST PATH (the containmentScored treatment
         // applied to the symmetric join): with ≤ 64 distinct tokens the
@@ -887,32 +797,13 @@ object Dedup {
         // tractable on a degenerate dense corpus, where candidate volume
         // is ∝ the (quadratic) true-pair count and the verify machinery
         // was ~2× the total cost (measured: SCALE.md round-12 entry).
-        prefixCandidates(d, blockCols, threshold, commonVocab,
-            hotBucketCap, Some(ranks), mask, parts)
+        prefixCandidates(tok.d, blockCols, threshold, commonVocab,
+            hotBucketCap, Some(tok.ranks), mask, tok.parts)
           .dropDuplicates("a_id", "b_id")
       case None =>
-        val cand = prefixCandidates(d, blockCols, threshold, commonVocab,
-          hotBucketCap, Some(ranks), None, parts)
-        // The payload sides MUST come back via a shuffle join on the id: they
-        // are corpus-sized, and their parquet-bytes estimate is tiny (token
-        // arrays compress ~1000:1 against their in-memory UnsafeRow form), so
-        // the planner would otherwise pick a broadcast build measured at
-        // 4.8 GiB for 50k docs — unbuildable at any real corpus size.
-        // SHUFFLE_HASH keeps the payload the per-partition build side against
-        // the larger IDs-only candidate stream (pre-partitioned on the id
-        // above the volume gate, so each build map fits).
-        def sizedBy(df: DataFrame, key: String): DataFrame =
-          if (parts > 0) df.repartition(parts, col(key)) else df
-        val aSide = sizedBy(d.select(col("id").as("a_id"), col("w").as("a_w"),
-          col("nw").as("a_nw")), "a_id").hint("SHUFFLE_HASH")
-        val bSide = sizedBy(d.select(col("id").as("b_id"), col("w").as("b_w"),
-          col("nw").as("b_nw")), "b_id").hint("SHUFFLE_HASH")
-        cand.join(aSide, "a_id").join(bSide, "b_id")
-          .withColumn("inter",
-            HashExpressions.sortedIntersectSize(col("a_w"), col("b_w")))
-          .select(col("a_id"), col("b_id"),
-            (col("inter") / (col("a_nw") + col("b_nw") - col("inter"))).as("jaccard"))
-          .filter(col("jaccard") >= threshold)
+        verified(prefixCandidates(tok.d, blockCols, threshold, commonVocab,
+          hotBucketCap, Some(tok.ranks), None, tok.parts), tok, "jaccard",
+          JaccardOfInter, threshold)
     }
   }
 
@@ -935,55 +826,22 @@ object Dedup {
                                     textCol: String = "text", idCol: String = "doc_id",
                                     commonVocab: Int = 10000,
                                     hotBucketCap: Int = 100000): DataFrame = {
-    // checkpoint the tokenized frames — the containment-incremental
-    // rationale: the rank/hot probes must not re-run the split/sort
-    // kernel; the standing side stands in for a persisted tokenized
-    // table at warehouse scale
-    // one spread + checkpoint over the tagged union instead of one per
-    // side — the containment-incremental treatment: the two eager
-    // per-side checkpoints ran sequentially, and the sides are disjoint
-    // so a batch flag recovers each side from the shared blocks exactly
-    val tagged = batch.withColumn("__batch", lit(true))
-      .unionByName(existing.withColumn("__batch", lit(false)))
-    val din = graft.ops.ScanSpread.spread(tagged.sparkSession, tagged,
-      graft.ops.ScanSpread.KernelFloor)
-    val dTagged = din.select(
-        (col(idCol).as("id") +: blockCols.map(col)) :+
-          array_sort(array_distinct(split(col(textCol), "\\s+"))).as("w") :+
-          col("__batch"): _*)
-      .withColumn("nw", size(col("w")))
-      .localCheckpoint()
-    val dNew = dTagged.filter(col("__batch")).drop("__batch")
-    val dAll = dTagged.drop("__batch")
-    val ranks = tokenRanks(dAll, commonVocab)
-    // spill-aware sizing: one cheap aggregate over the CHECKPOINTED
-    // union (no kernel re-run) prices the exploded index volume
-    val parts = candJoinParts(dAll.sparkSession, Option(
-      dAll.agg(sum(col("nw").cast("long"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L))
-    exactMaskFromRanks(ranks, commonVocab) match {
+    val tok = tokenized(tagBatch(batch, existing), blockCols, textCol, idCol,
+      commonVocab, Seq("__batch"))
+    val dNew = tok.d.filter(col("__batch")).drop("__batch")
+    val dAll = tok.d.drop("__batch")
+    exactMaskFromRanks(tok.ranks, commonVocab) match {
       case mask @ Some(_) =>
         // bounded-dictionary fast path — see prefixJaccardPairs; one
         // shared rank map over the union keeps the mask bijective for
         // both sides
-        prefixCandidatesAB(dNew, dAll, ranks, blockCols, threshold,
-            hotBucketCap, mask, parts)
+        prefixCandidatesAB(dNew, dAll, tok.ranks, blockCols, threshold,
+            hotBucketCap, mask, tok.parts)
           .dropDuplicates("a_id", "b_id")
       case None =>
-        val cand = prefixCandidatesAB(dNew, dAll, ranks, blockCols, threshold,
-          hotBucketCap, None, parts)
-        def sizedBy(df: DataFrame, key: String): DataFrame =
-          if (parts > 0) df.repartition(parts, col(key)) else df
-        val aSide = sizedBy(dAll.select(col("id").as("a_id"), col("w").as("a_w"),
-          col("nw").as("a_nw")), "a_id").hint("SHUFFLE_HASH")
-        val bSide = sizedBy(dAll.select(col("id").as("b_id"), col("w").as("b_w"),
-          col("nw").as("b_nw")), "b_id").hint("SHUFFLE_HASH")
-        cand.join(aSide, "a_id").join(bSide, "b_id")
-          .withColumn("inter",
-            HashExpressions.sortedIntersectSize(col("a_w"), col("b_w")))
-          .select(col("a_id"), col("b_id"),
-            (col("inter") / (col("a_nw") + col("b_nw") - col("inter"))).as("jaccard"))
-          .filter(col("jaccard") >= threshold)
+        verified(prefixCandidatesAB(dNew, dAll, tok.ranks, blockCols, threshold,
+          hotBucketCap, None, tok.parts), tok, "jaccard", JaccardOfInter,
+          threshold)
     }
   }
 
@@ -991,9 +849,9 @@ object Dedup {
     * probe-side prefixes (dA) × index-side prefixes (dB), canonical
     * (least, greatest) distinct pairs. Hot buckets are metered by the
     * a×b PRODUCT (the honest join cost for asymmetric sides — the
-    * containment treatment) and grid-salted two-ways; all PPJoin
-    * filters (length, positional) are symmetric in (a, b) and apply
-    * unchanged.
+    * containment treatment) and grid-salted
+    * ([[graft.ops.Skew.gridJoin]]); all PPJoin filters (length,
+    * positional) are symmetric in (a, b) and apply unchanged.
     */
   private[text] def prefixCandidatesAB(dA: DataFrame, dB: DataFrame,
                                        ranks: Map[String, Int],
@@ -1002,61 +860,13 @@ object Dedup {
                                        hotBucketCap: Int,
                                        exactMask: Option[Column] = None,
                                        sizeParts: Int = 0): DataFrame = {
-    def prefixes(d: DataFrame, role: String): DataFrame = exactMask match {
-      case Some(m) =>
-        d.withColumn("sig", m)
-          .select((col("id") +: blockCols.map(col)) :+ col("nw") :+ col("sig") :+
-            posexplode(HashExpressions.prefixTokens(col("w"), ranks, threshold)): _*)
-          .withColumnRenamed("col", "token")
-          .toDF(s"${role}_id" +: blockCols ++: s"${role}_nw" +: s"${role}_sig" +:
-            Seq(s"${role}_pos", "token"): _*)
-      case None =>
-        d.select((col("id") +: blockCols.map(col)) :+ col("nw") :+
-          posexplode(HashExpressions.prefixTokens(col("w"), ranks, threshold)): _*)
-          .withColumnRenamed("col", "token")
-          .toDF(s"${role}_id" +: blockCols :+ s"${role}_nw" :+ s"${role}_pos" :+ "token": _*)
-    }
     // never broadcast a corpus-proportional exploded index (see
-    // prefixCandidates); above the volume gate pre-partition both sides
-    // on the join keys so each shuffled-hash build map fits
-    def sized(df: DataFrame): DataFrame =
-      if (sizeParts > 0)
-        df.repartition(sizeParts, (blockCols :+ "token").map(col): _*)
-      else df
-    val a = sized(prefixes(dA, "a")).hint("SHUFFLE_HASH")
-    val b = sized(prefixes(dB, "b"))
-    val aCnt = a.groupBy(col("token")).agg(count(lit(1)).as("na"))
-    val bCnt = b.groupBy(col("token")).agg(count(lit(1)).as("nb"))
-    val hotRows = aCnt.join(bCnt, "token")
-      .filter(col("na") * col("nb") > hotBucketCap)
-      .orderBy((col("na") * col("nb")).desc, col("token")).limit(64).collect()
-    val joined =
-      if (hotRows.isEmpty) a.join(b, blockCols :+ "token")
-      else {
-        val hot = hotRows.map(_.getString(0)).toSeq
-        val maxProd = hotRows.map(r => r.getLong(1) * r.getLong(2)).max
-        val grid = math.min(32L,
-          math.ceil(math.sqrt(maxProd.toDouble / hotBucketCap)).toLong).toInt
-        // the hot path replicates both sides grid× — size its exchange
-        // from the census (hotGridParts; non-spilling SHJ builds)
-        val hotParts = hotGridParts(a.sparkSession,
-          hotRows.map(r => math.max(r.getLong(1), r.getLong(2))).sum * grid)
-        val hotKeys = blockCols ++ Seq("token", "g1", "g2")
-        def sizedHot(df: DataFrame): DataFrame =
-          if (hotParts > 0) df.repartition(hotParts, hotKeys.map(col): _*)
-          else df
-        val cold = a.filter(!col("token").isin(hot: _*))
-          .join(b.filter(!col("token").isin(hot: _*)), blockCols :+ "token")
-        val aHot = sizedHot(a.filter(col("token").isin(hot: _*))
-          .withColumn("g1", pmod(xxhash64(col("a_id")), lit(grid.toLong)))
-          .withColumn("g2", explode(sequence(lit(0L), lit(grid - 1L)))))
-        val bHot = sizedHot(b.filter(col("token").isin(hot: _*))
-          .withColumn("g2", pmod(xxhash64(col("b_id")), lit(grid.toLong)))
-          .withColumn("g1", explode(sequence(lit(0L), lit(grid - 1L)))))
-        cold.unionByName(
-          aHot.join(bHot, hotKeys)
-            .drop("g1", "g2"))
-      }
+    // prefixCandidates); hot tokens are metered by the a×b product
+    def prefixes(d: DataFrame, role: String): DataFrame =
+      prefixIndex(d, blockCols, ranks, threshold, exactMask, role)
+    val joined = Skew.gridJoin(prefixes(dA, "a").hint("SHUFFLE_HASH"),
+      prefixes(dB, "b"), blockCols :+ "token", col("token"), hotBucketCap,
+      Skew.PairProduct, sizeParts)
     val eps = 1e-9
     val alpha = ceil((lit(threshold) / (1 + threshold)) * (col("a_nw") + col("b_nw")) - eps)
     val filtered = joined
@@ -1103,22 +913,6 @@ object Dedup {
     graft.ops.ExchangeSizing.shjBuildParts(spark, tokenInstances,
       bytesPerRow = 150)
 
-  /** Hot-GRID exchange sizing: the grid-salted hot path REPLICATES its
-    * inputs `grid`× by construction, so its build volume is exactly
-    * `hot-census rows × grid` — measured, not estimated (the census is
-    * already on the driver). A 30-token degenerate corpus sends nearly
-    * every bucket hot, and at the sf10 ladder point the replicated
-    * build (≈ 32 M rows over 32 partitions) OOM'd the non-spilling
-    * shuffled-hash maps while the INPUT volume sat below every gate.
-    * Row shape: a replicated grid row carries ids + token + two grid
-    * keys + payload refs ≈ 300 B ([[graft.ops.ExchangeSizing]] derives
-    * the rows-per-map); 0 = keep the default layout.
-    */
-  private[text] def hotGridParts(spark: org.apache.spark.sql.SparkSession,
-                                 replicatedRows: Long): Int =
-    graft.ops.ExchangeSizing.shjBuildParts(spark, replicatedRows,
-      bytesPerRow = 300)
-
   /** The canonical token order both AllPairs pipelines sort by: document
     * frequency ascending (rare first — rare prefix tokens minimize bucket
     * collisions), realized as a BOUNDED dictionary of the top
@@ -1138,6 +932,107 @@ object Dedup {
       .map { case (r, i) => r.getString(0) -> (commonVocab - i) }.toMap
   }
 
+  /** The AllPairs preamble's result: the checkpointed token frame `d`
+    * `(id, blockCols…, w, [carry…,] nw)`, its canonical token ranks, the
+    * spill-aware exchange size of the hinted SHJ joins (0 = default
+    * layout) and the smallest token-set size (containment's αmin).
+    */
+  private[text] final case class Tokenized(d: DataFrame, ranks: Map[String, Int],
+                                           parts: Int, minNw: Option[Int])
+
+  /** The AllPairs preamble, written once: tokenize, checkpoint, rank and
+    * size. Token sets are SORTED once per document so the verify can
+    * merge-walk (SortedIntersectSize) instead of building an intersection
+    * array per pair; PrefixTokens re-sorts by rank internally, so w's
+    * stored order is free. The tokenize+sort stage is CPU-per-row, so a
+    * row-group-starved scan is spread first (ScanSpread kernel floor;
+    * 12 → 9 s Jaccard, 37 → 25 s containment at sf1). The rank probe,
+    * the sizing probe, the hot census, the candidate join and both verify
+    * join-backs all read the frame, and without the checkpoint each
+    * re-ran the split/distinct/sort kernel over the corpus; at warehouse
+    * scale it is the persisted tokenized table. One bounded probe serves
+    * the sizing (sum(nw) is the exact exploded index volume) and αmin.
+    */
+  private[text] def tokenized(docs: DataFrame, blockCols: Seq[String],
+                              textCol: String, idCol: String, commonVocab: Int,
+                              carryCols: Seq[String] = Nil): Tokenized = {
+    val din = graft.ops.ScanSpread.spread(docs.sparkSession, docs,
+      graft.ops.ScanSpread.KernelFloor)
+    val d = din.select((col(idCol).as("id") +: blockCols.map(col)) ++
+        (array_sort(array_distinct(split(col(textCol), "\\s+"))).as("w") +:
+          carryCols.map(col)): _*)
+      .withColumn("nw", size(col("w")))
+      .localCheckpoint()
+    val ranks = tokenRanks(d, commonVocab)
+    val sz = d.agg(sum(col("nw").cast("long")), min(col("nw"))).head()
+    Tokenized(d, ranks,
+      candJoinParts(docs.sparkSession,
+        Option(sz.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)),
+      Option(sz.get(1)).map(_.asInstanceOf[Int]))
+  }
+
+  /** Exact verify of IDs-only candidate pairs: both token sets join back
+    * by id, `inter` = |A∩B| merge-walks the sorted sets, and pairs whose
+    * `score` reaches `threshold` come out as `(a_id, b_id, name)`. The
+    * payload sides MUST come back via a shuffle join on the id: they are
+    * corpus-sized, and their parquet-bytes estimate is tiny (token arrays
+    * compress ~1000:1 against their in-memory UnsafeRow form), so the
+    * planner would otherwise pick a broadcast build — measured at 4.8 GiB
+    * for 50k docs. SHUFFLE_HASH keeps the payload the per-partition build
+    * side against the larger candidate stream, pre-partitioned on the id
+    * above the volume gate so each build map fits.
+    */
+  private def verified(cand: DataFrame, tok: Tokenized, name: String,
+                       score: Column, threshold: Double): DataFrame = {
+    def side(role: String): DataFrame = {
+      val s = tok.d.select(col("id").as(s"${role}_id"), col("w").as(s"${role}_w"),
+        col("nw").as(s"${role}_nw"))
+      (if (tok.parts > 0) s.repartition(tok.parts, col(s"${role}_id")) else s)
+        .hint("SHUFFLE_HASH")
+    }
+    cand.join(side("a"), "a_id").join(side("b"), "b_id")
+      .withColumn("inter",
+        HashExpressions.sortedIntersectSize(col("a_w"), col("b_w")))
+      .select(col("a_id"), col("b_id"), score.as(name))
+      .filter(col(name) >= threshold)
+  }
+
+  /** [[verified]] scores over its `inter` / `a_nw` / `b_nw` columns. */
+  private val JaccardOfInter =
+    col("inter") / (col("a_nw") + col("b_nw") - col("inter"))
+  private val ContainmentOfInter = col("inter") / col("a_nw")
+
+  /** A batch and the standing corpus as ONE frame, `__batch` flagging
+    * each side: the incremental pipelines run one kernel pass and one
+    * checkpoint over it instead of one per side (the two eager per-side
+    * checkpoints ran sequentially), and since the sides are disjoint the
+    * flag recovers each exactly. At warehouse scale the standing side is
+    * a persisted table and the checkpoint its in-session stand-in.
+    */
+  private[text] def tagBatch(batch: DataFrame, existing: DataFrame): DataFrame =
+    batch.withColumn("__batch", lit(true))
+      .unionByName(existing.withColumn("__batch", lit(false)))
+
+  /** The prefix index of a tokenized frame `(id, blockCols…, w, nw)`:
+    * one row per token of each document's canonical `threshold` prefix,
+    * renamed `(role_id, blockCols…, role_nw, [role_sig,] role_pos,
+    * token)`. posexplode: the index within the prefix array equals the
+    * token's position in the full canonical sort — PPJoin's positional
+    * filter needs it. `sig` (an 8-byte token bitset) rides every row when
+    * given.
+    */
+  private def prefixIndex(d: DataFrame, blockCols: Seq[String],
+                          ranks: Map[String, Int], threshold: Double,
+                          sig: Option[Column], role: String): DataFrame = {
+    val sigCols = sig.map(_ => "sig").toSeq
+    sig.fold(d)(d.withColumn("sig", _))
+      .select((col("id") +: blockCols.map(col)) ++ ("nw" +: sigCols).map(col) :+
+        posexplode(HashExpressions.prefixTokens(col("w"), ranks, threshold)): _*)
+      .withColumnRenamed("col", "token")
+      .toDF(s"${role}_id" +: blockCols ++: s"${role}_nw" +:
+        sigCols.map(c => s"${role}_$c") ++: Seq(s"${role}_pos", "token"): _*)
+  }
+
   /** Candidate (a_id, b_id) generation for [[prefixJaccardPairs]] —
     * exposed for candidate-volume measurement. `d` must carry
     * (id, blockCols…, w: array<string> distinct tokens, nw: size).
@@ -1145,13 +1040,9 @@ object Dedup {
     * Hot-bucket safety: one degenerate token shared by N documents makes
     * an N² bucket — at 100 TB a single such token would pin the whole
     * join on one task. Buckets whose prefix-occurrence count exceeds
-    * `hotBucketCap` go through a GRID-SALTED self-join instead: row x with
-    * group g=hash(x) mod G is replicated to cells (g, *) on the a-side and
-    * (*, g) on the b-side, so pair (x,y) meets in exactly ONE cell
-    * (g_x, g_y) — identical pair set, spread over G² tasks. Lossless by
-    * construction (no pair is dropped, none duplicated); the per-bucket
-    * count aggregation is map-side-combined and vocabulary-sized, and the
-    * driver holds at most the few (bucket, count) rows above the cap.
+    * `hotBucketCap` go through the lossless grid-salted self-join
+    * ([[graft.ops.Skew.gridJoin]]): identical pair set, spread over G²
+    * tasks.
     */
   private[text] def prefixCandidates(d: DataFrame, blockCols: Seq[String],
                                      threshold: Double, commonVocab: Int,
@@ -1160,78 +1051,24 @@ object Dedup {
                                      exactMask: Option[Column] = None,
                                      sizeParts: Int = 0): DataFrame = {
     val ranks = ranksOpt.getOrElse(tokenRanks(d, commonVocab))
-    def sized(df: DataFrame, keys: Seq[String]): DataFrame =
-      if (sizeParts > 0) df.repartition(sizeParts, keys.map(col): _*) else df
     // Under `exactMask` (≤64-token bounded dictionary, see
     // containmentCandidatesAB) each index row carries the collision-free
     // 8-byte token bitset, |A∩B| is exact on the join output, and the
     // output is the SCORED threshold-passing pre-dedup stream
     // (a_id, b_id, jaccard) — no verify join-back. Without it: the
     // distinct (a_id, b_id) pair set, as before.
-    // posexplode: the index within the prefix array equals the token's
-    // position in the full canonical sort — PPJoin's positional filter
-    // needs it.
-    val prefixes = exactMask match {
-      case Some(m) =>
-        d.withColumn("sig", m)
-          .select((col("id") +: blockCols.map(col)) :+ col("nw") :+ col("sig") :+
-            posexplode(HashExpressions.prefixTokens(col("w"), ranks, threshold)): _*)
-          .withColumnRenamed("col", "token")
-      case None =>
-        d.select((col("id") +: blockCols.map(col)) :+ col("nw") :+
-          posexplode(HashExpressions.prefixTokens(col("w"), ranks, threshold)): _*)
-          .withColumnRenamed("col", "token")
-    }
-    val sigA = if (exactMask.isDefined) Seq("a_sig") else Seq.empty[String]
-    val sigB = if (exactMask.isDefined) Seq("b_sig") else Seq.empty[String]
     // Both sides are corpus-proportional exploded indexes whose byte
     // estimate descends from one compact parquet scan — never let the
-    // planner broadcast one (see containmentCandidates, where the same
+    // planner broadcast one (see containmentCandidatesAB, where the same
     // mis-estimate built a 4.8 GiB relation at sf1). Above the volume
     // gate the join inputs are pre-partitioned on the join keys so each
     // shuffled-hash build map fits (candJoinParts — SHJ does not spill).
-    val joinKeys = blockCols :+ "token"
-    val a = sized(prefixes.toDF(
-        "a_id" +: blockCols ++: "a_nw" +: sigA ++: Seq("a_pos", "token"): _*),
-        joinKeys)
-      .hint("SHUFFLE_HASH")
-    val b = sized(prefixes.toDF(
-      "b_id" +: blockCols ++: "b_nw" +: sigB ++: Seq("b_pos", "token"): _*),
-      joinKeys)
-    // Hot buckets: tokens whose prefix occurrence count exceeds the cap.
-    // The degenerate case is a handful of tokens by construction (prefixes
-    // prefer RARE tokens), so the driver-side set is tiny; limit(64) keeps
-    // the grid path bounded even against an adversarial corpus — buckets
-    // beyond it stay on the plain join, still correct, just unspread.
-    val hotRows = prefixes.groupBy(col("token"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > hotBucketCap)
-      .orderBy(col("n").desc, col("token")).limit(64).collect()
-    val joined =
-      if (hotRows.isEmpty) a.join(b, blockCols :+ "token")
-      else {
-        val hot = hotRows.map(_.getString(0)).toSeq
-        val maxN = hotRows.map(_.getLong(1)).max
-        val grid = math.min(32L, (maxN + hotBucketCap - 1) / hotBucketCap).toInt
-        // the hot path replicates both sides grid× — size its exchange
-        // from the census (hotGridParts; non-spilling SHJ builds)
-        val hotParts = hotGridParts(a.sparkSession,
-          hotRows.map(_.getLong(1)).sum * grid)
-        val hotKeys = blockCols ++ Seq("token", "g1", "g2")
-        def sizedHot(df: DataFrame): DataFrame =
-          if (hotParts > 0) df.repartition(hotParts, hotKeys.map(col): _*)
-          else df
-        val cold = a.filter(!col("token").isin(hot: _*))
-          .join(b.filter(!col("token").isin(hot: _*)), blockCols :+ "token")
-        val aHot = sizedHot(a.filter(col("token").isin(hot: _*))
-          .withColumn("g1", pmod(xxhash64(col("a_id")), lit(grid.toLong)))
-          .withColumn("g2", explode(sequence(lit(0L), lit(grid - 1L)))))
-        val bHot = sizedHot(b.filter(col("token").isin(hot: _*))
-          .withColumn("g2", pmod(xxhash64(col("b_id")), lit(grid.toLong)))
-          .withColumn("g1", explode(sequence(lit(0L), lit(grid - 1L)))))
-        cold.unionByName(
-          aHot.join(bHot, hotKeys)
-            .drop("g1", "g2"))
-      }
+    // Hot tokens are few by construction (prefixes prefer RARE tokens).
+    def prefixes(role: String): DataFrame =
+      prefixIndex(d, blockCols, ranks, threshold, exactMask, role)
+    val joined = Skew.gridJoin(prefixes("a").hint("SHUFFLE_HASH"),
+      prefixes("b"), blockCols :+ "token", col("token"), hotBucketCap,
+      Skew.Occurrences, sizeParts)
     // Candidate pruning, both lossless (PPJoin, Xiao et al. WWW'08):
     //  - length filter: Jaccard ≤ min/max, so J ≥ t forces
     //    t·|B| ≤ |A| ≤ |B|/t;
@@ -1484,8 +1321,9 @@ object Dedup {
     *
     * The B-side full-token index is frequency-skewed by construction, so
     * hot buckets are measured by their a×b PRODUCT (the join cost) and
-    * grid-salted exactly like the symmetric pipelines — pair (x,y) meets
-    * in one (g_x, g_y) cell, spread over G² tasks, lossless.
+    * grid-salted by the same [[graft.ops.Skew.gridJoin]] as the
+    * symmetric pipelines — pair (x,y) meets in one (g_x, g_y) cell,
+    * spread over G² tasks, lossless.
     */
   def containmentPairs(docs: DataFrame, blockCols: Seq[String], threshold: Double,
                        textCol: String = "text", idCol: String = "doc_id",
@@ -1527,54 +1365,17 @@ object Dedup {
                                       threshold: Double, textCol: String,
                                       idCol: String, commonVocab: Int,
                                       hotBucketCap: Int): (DataFrame, Boolean) = {
-    // same kernel-floor scan spread as prefixJaccardPairs (37 → 25 s at sf1)
-    val din = graft.ops.ScanSpread.spread(docs.sparkSession, docs,
-      graft.ops.ScanSpread.KernelFloor)
-    // Checkpoint the tokenized frame — the incremental twin's rationale
-    // applied to the full pass: the pipeline runs 3 bounded driver
-    // probes (ranks, sizing+αmin, hot census) plus the candidate join
-    // and two verify join-backs, and WITHOUT materialization each
-    // re-runs the split/distinct/sort kernel over the corpus. At
-    // warehouse scale this frame is the persisted tokenized table the
-    // pipeline would read; the checkpoint is its in-session stand-in.
-    val d = din.select(
-      (col(idCol).as("id") +: blockCols.map(col)) :+
-        array_sort(array_distinct(split(col(textCol), "\\s+"))).as("w"): _*)
-      .withColumn("nw", size(col("w")))
-      .localCheckpoint()
-    val ranks = tokenRanks(d, commonVocab)
-    // ONE bounded probe for exchange sizing AND the αmin bound (the
-    // separate min(nw) job folded in; sum(nw) is the exact exploded
-    // index volume, the incremental twin's sizing input)
-    val szRow = d.agg(sum(col("nw").cast("long")), min(col("nw"))).head()
-    val parts = candJoinParts(docs.sparkSession,
-      Option(szRow.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
-    val minNw = Option(szRow.get(1)).map(_.asInstanceOf[Int])
-    exactMaskFromRanks(ranks, commonVocab) match {
+    val tok = tokenized(docs, blockCols, textCol, idCol, commonVocab)
+    exactMaskFromRanks(tok.ranks, commonVocab) match {
       case mask @ Some(_) =>
-        val scored = containmentCandidatesAB(d, d, ranks, blockCols,
-            threshold, hotBucketCap, mask, parts, minNw)
+        val scored = containmentCandidatesAB(tok.d, tok.d, tok.ranks, blockCols,
+            threshold, hotBucketCap, mask, tok.parts, tok.minNw)
           .filter(col("containment") >= threshold)
         (scored, true)
       case None =>
-      val cand = containmentCandidatesAB(d, d, ranks, blockCols,
-        threshold, hotBucketCap, None, parts, minNw)
-      // Shuffle-join the corpus-sized payload back by id — see the same
-      // treatment in prefixJaccardPairs (a byte-estimate-driven broadcast
-      // of the token arrays measured 4.8 GiB at sf1).
-      def sizedBy(df: DataFrame, key: String): DataFrame =
-        if (parts > 0) df.repartition(parts, col(key)) else df
-      val aSide = sizedBy(d.select(col("id").as("a_id"), col("w").as("a_w"),
-        col("nw").as("a_nw")), "a_id").hint("SHUFFLE_HASH")
-      val bSide = sizedBy(d.select(col("id").as("b_id"), col("w").as("b_w"),
-        col("nw").as("b_nw")), "b_id").hint("SHUFFLE_HASH")
-      val scored = cand.join(aSide, "a_id").join(bSide, "b_id")
-        .withColumn("inter",
-          HashExpressions.sortedIntersectSize(col("a_w"), col("b_w")))
-        .select(col("a_id"), col("b_id"),
-          (col("inter") / col("a_nw")).as("containment"))
-        .filter(col("containment") >= threshold)
-      (scored, false)
+        val cand = containmentCandidatesAB(tok.d, tok.d, tok.ranks, blockCols,
+          threshold, hotBucketCap, None, tok.parts, tok.minNw)
+        (verified(cand, tok, "containment", ContainmentOfInter, threshold), false)
     }
   }
 
@@ -1642,78 +1443,25 @@ object Dedup {
                                   textCol: String = "text", idCol: String = "doc_id",
                                   commonVocab: Int = 10000,
                                   hotBucketCap: Int = 100000): DataFrame = {
-    // Checkpoint the tokenized frames: the pipeline runs 6 bounded
-    // driver probes (ranks, vocab gate, 2× αmin, 2× hot buckets) plus
-    // two candidate joins, and WITHOUT materialization each re-runs the
-    // split/distinct/sort kernel over the corpus — measured at sf1 this
-    // made the incremental probe cost as much as the full pair query.
-    // At warehouse scale the standing side is a persisted tokenized
-    // table (the index the batch probes); the checkpoint is its
-    // in-session stand-in, batch-proportional on the new side.
-    // ONE spread + checkpoint over the tagged union instead of one per
-    // side: the two eager per-side checkpoints ran SEQUENTIALLY (two
-    // scan+kernel+materialize barriers); the sides are disjoint, so a
-    // batch flag recovers each side from the shared blocks exactly.
-    val tagged = batch.withColumn("__batch", lit(true))
-      .unionByName(existing.withColumn("__batch", lit(false)))
-    val din = graft.ops.ScanSpread.spread(tagged.sparkSession, tagged,
-      graft.ops.ScanSpread.KernelFloor)
-    val dTagged = din.select(
-        (col(idCol).as("id") +: blockCols.map(col)) :+
-          array_sort(array_distinct(split(col(textCol), "\\s+"))).as("w") :+
-          col("__batch"): _*)
-      .withColumn("nw", size(col("w")))
-      .localCheckpoint()
-    val dAll = dTagged.drop("__batch")
-    val dNew = dTagged.filter(col("__batch")).drop("__batch")
-    val dOld = dTagged.filter(!col("__batch")).drop("__batch")
-    val ranks = tokenRanks(dAll, commonVocab)
-    val maskOpt = exactMaskFromRanks(ranks, commonVocab)
-    // spill-aware sizing from the checkpointed union (no kernel re-run)
-    val parts = candJoinParts(dAll.sparkSession, Option(
-      dAll.agg(sum(col("nw").cast("long"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L))
-    if (maskOpt.isDefined) {
-      containmentCandidatesAB(dNew, dAll, ranks, blockCols, threshold,
-          hotBucketCap, maskOpt, parts)
-        .unionByName(containmentCandidatesAB(dOld, dNew, ranks, blockCols,
-          threshold, hotBucketCap, maskOpt, parts))
-        .filter(col("containment") >= threshold)
-        .dropDuplicates("a_id", "b_id")
-    } else {
-      val cand = containmentCandidatesAB(dNew, dAll, ranks, blockCols,
-          threshold, hotBucketCap, None, parts)
-        .unionByName(containmentCandidatesAB(dOld, dNew, ranks, blockCols,
-          threshold, hotBucketCap, None, parts))
-      def sizedBy(df: DataFrame, key: String): DataFrame =
-        if (parts > 0) df.repartition(parts, col(key)) else df
-      val aSide = sizedBy(dAll.select(col("id").as("a_id"), col("w").as("a_w"),
-        col("nw").as("a_nw")), "a_id").hint("SHUFFLE_HASH")
-      val bSide = sizedBy(dAll.select(col("id").as("b_id"), col("w").as("b_w")),
-        "b_id").hint("SHUFFLE_HASH")
-      cand.join(aSide, "a_id").join(bSide, "b_id")
-        .select(col("a_id"), col("b_id"),
-          (HashExpressions.sortedIntersectSize(col("a_w"), col("b_w")) /
-            col("a_nw")).as("containment"))
-        .filter(col("containment") >= threshold)
-    }
+    // the tokenized union is checkpointed once: the pipeline runs 6
+    // bounded driver probes (ranks, vocab gate, 2× αmin, 2× hot buckets)
+    // plus two candidate joins, and without materialization each re-ran
+    // the split/distinct/sort kernel — measured at sf1 this made the
+    // incremental probe cost as much as the full pair query
+    val tok = tokenized(tagBatch(batch, existing), blockCols, textCol, idCol,
+      commonVocab, Seq("__batch"))
+    val dAll = tok.d.drop("__batch")
+    val dNew = tok.d.filter(col("__batch")).drop("__batch")
+    val dOld = tok.d.filter(!col("__batch")).drop("__batch")
+    val maskOpt = exactMaskFromRanks(tok.ranks, commonVocab)
+    val cand = containmentCandidatesAB(dNew, dAll, tok.ranks, blockCols, threshold,
+        hotBucketCap, maskOpt, tok.parts)
+      .unionByName(containmentCandidatesAB(dOld, dNew, tok.ranks, blockCols,
+        threshold, hotBucketCap, maskOpt, tok.parts))
+    if (maskOpt.isDefined)
+      cand.filter(col("containment") >= threshold).dropDuplicates("a_id", "b_id")
+    else verified(cand, tok, "containment", ContainmentOfInter, threshold)
   }
-
-  /** Candidate (a_id, b_id) generation for [[containmentPairs]] — exposed
-    * for candidate-volume measurement (PairStats). With `exactMask`
-    * (the ≤64-token bounded-dictionary regime) the signature carried on
-    * every index row IS the exact vocab-rank bitset, the bloom witness
-    * bound becomes the exact threshold test, and the output is the
-    * SCORED pre-dedup stream `(a_id, b_id, containment)` — no verify
-    * join-back needed. Without it: the distinct `(a_id, b_id)` pair
-    * set, as before.
-    */
-  private[text] def containmentCandidates(d: DataFrame, blockCols: Seq[String],
-                                          threshold: Double, commonVocab: Int,
-                                          hotBucketCap: Int,
-                                          exactMask: Option[Column] = None): DataFrame =
-    containmentCandidatesAB(d, d, tokenRanks(d, commonVocab), blockCols,
-      threshold, hotBucketCap, exactMask)
 
   /** The bounded-dictionary exact-mask expression, derived from an
     * ALREADY-collected rank dictionary — no extra corpus job: `ranks`
@@ -1736,12 +1484,18 @@ object Dedup {
 
   /** Two-sided candidate core: CONTAINED side `dA` (canonical prefixes
     * probe), CONTAINER side `dB` (full positionally-truncated token
-    * index). The self case `dA = dB` is [[containmentCandidates]]; the
-    * incremental case probes a batch against the standing corpus (and
-    * vice versa) without ever regenerating old×old candidates. `ranks`
-    * must be ONE shared frequency order for both sides — the prefix
-    * lemma relates A's prefix positions to B's index positions through
-    * the same canonical token order.
+    * index). The self case `dA = dB` is [[containmentPairs]] (and
+    * PairStats' candidate-volume measurement); the incremental case
+    * probes a batch against the standing corpus (and vice versa) without
+    * ever regenerating old×old candidates. `ranks` must be ONE shared
+    * frequency order for both sides — the prefix lemma relates A's
+    * prefix positions to B's index positions through the same canonical
+    * token order. With `exactMask` (the ≤64-token bounded-dictionary
+    * regime) the signature carried on every index row IS the exact
+    * vocab-rank bitset, the bloom witness bound becomes the exact
+    * threshold test, and the output is the SCORED pre-dedup stream
+    * `(a_id, b_id, containment)` — no verify join-back needed. Without
+    * it: the distinct `(a_id, b_id)` pair set.
     */
   private[text] def containmentCandidatesAB(dA: DataFrame, dB: DataFrame,
                                             ranks: Map[String, Int],
@@ -1765,12 +1519,7 @@ object Dedup {
     // rank), so the witness count is the exact missing-token count.
     val sigExpr = exactMask.getOrElse(expr(
       "aggregate(w, 0L, (acc, t) -> acc | shiftleft(1L, cast(pmod(xxhash64(t), 64) as int)))"))
-    val dAS = dA.withColumn("sig", sigExpr)
-    val dBS = dB.withColumn("sig", sigExpr)
-    val aPref = dAS.select((col("id") +: blockCols.map(col)) :+ col("nw") :+ col("sig") :+
-      posexplode(HashExpressions.prefixTokens(col("w"), ranks, threshold)): _*)
-      .withColumnRenamed("col", "token")
-      .toDF("a_id" +: blockCols :+ "a_nw" :+ "a_sig" :+ "a_pos" :+ "token": _*)
+    val aPref = prefixIndex(dA, blockCols, ranks, threshold, Some(sigExpr), "a")
     // Container-side index in canonical order, POSITIONALLY TRUNCATED:
     // any qualifying pair (A, B) produces a join row at the FIRST common
     // token (canonical order), which sits at B-position p_b with all α
@@ -1787,61 +1536,18 @@ object Dedup {
       .map(_.asInstanceOf[Int]).getOrElse(0))
     val eps0 = 1e-9
     val alphaMin = math.ceil(threshold * minNw - eps0).toInt
-    val bAll = dBS.select((col("id") +: blockCols.map(col)) :+ col("nw") :+ col("sig") :+
-      posexplode(HashExpressions.prefixTokens(col("w"), ranks, 1e-9)): _*)
-      .withColumnRenamed("col", "token")
-      .toDF("b_id" +: blockCols :+ "b_nw" :+ "b_sig" :+ "b_pos" :+ "token": _*)
+    val bAll = prefixIndex(dB, blockCols, ranks, 1e-9, Some(sigExpr), "b")
       .filter(col("b_pos") <= col("b_nw") - alphaMin)
-    // hot buckets by JOIN COST (a-count × b-count per token): the b side
-    // indexes every token, so frequent tokens are hot by construction —
-    // but their a-side prefix occurrences are few (prefixes prefer rare
-    // tokens), so the product is the honest cost measure. Bounded
-    // driver-side state as in prefixCandidates: ≤64 hot tokens.
-    val aCnt = aPref.groupBy(col("token")).agg(count(lit(1)).as("na"))
-    val bCnt = bAll.groupBy(col("token")).agg(count(lit(1)).as("nb"))
-    val hotRows = aCnt.join(bCnt, "token")
-      .filter(col("na") * col("nb") > hotBucketCap)
-      .orderBy((col("na") * col("nb")).desc, col("token")).limit(64).collect()
     // The b side is the corpus's FULL exploded token index — its
     // byte-size estimate descends from one compact parquet scan, so the
     // planner would broadcast it (measured 4.8 GiB built at sf1, growing
     // with the corpus). Force the shuffle join, building from the
-    // smaller prefix index; above the volume gate pre-partition both
-    // sides on the join keys so each build map fits (candJoinParts).
-    def sizedIdx(df: DataFrame): DataFrame =
-      if (sizeParts > 0)
-        df.repartition(sizeParts, (blockCols :+ "token").map(col): _*)
-      else df
-    val bAllS = sizedIdx(bAll)
-    val aPrefH = sizedIdx(aPref).hint("SHUFFLE_HASH")
-    val joined =
-      if (hotRows.isEmpty) aPrefH.join(bAllS, blockCols :+ "token")
-      else {
-        val hot = hotRows.map(_.getString(0)).toSeq
-        val maxProd = hotRows.map(r => r.getLong(1) * r.getLong(2)).max
-        // G² cells shrink a product-P bucket to ~P/G² per cell
-        val grid = math.min(32L,
-          math.ceil(math.sqrt(maxProd.toDouble / hotBucketCap)).toLong).toInt
-        // the hot path replicates BOTH sides grid× — size its exchange
-        // from the census (hotGridParts; non-spilling SHJ builds)
-        val hotParts = hotGridParts(bAll.sparkSession,
-          hotRows.map(r => math.max(r.getLong(1), r.getLong(2))).sum * grid)
-        val hotKeys = blockCols ++ Seq("token", "g1", "g2")
-        def sizedHot(df: DataFrame): DataFrame =
-          if (hotParts > 0) df.repartition(hotParts, hotKeys.map(col): _*)
-          else df
-        val cold = aPrefH.filter(!col("token").isin(hot: _*))
-          .join(bAllS.filter(!col("token").isin(hot: _*)), blockCols :+ "token")
-        val aHot = sizedHot(aPrefH.filter(col("token").isin(hot: _*))
-          .withColumn("g1", pmod(xxhash64(col("a_id")), lit(grid.toLong)))
-          .withColumn("g2", explode(sequence(lit(0L), lit(grid - 1L)))))
-        val bHot = sizedHot(bAllS.filter(col("token").isin(hot: _*))
-          .withColumn("g2", pmod(xxhash64(col("b_id")), lit(grid.toLong)))
-          .withColumn("g1", explode(sequence(lit(0L), lit(grid - 1L)))))
-        cold.unionByName(
-          aHot.join(bHot, hotKeys)
-            .drop("g1", "g2"))
-      }
+    // smaller prefix index. Hot tokens are metered by JOIN COST (a×b per
+    // token): the b side indexes every token, so frequent tokens are hot
+    // by construction, but their a-side prefix occurrences are few.
+    val joined = Skew.gridJoin(aPref.hint("SHUFFLE_HASH"), bAll,
+      blockCols :+ "token", col("token"), hotBucketCap, Skew.PairProduct,
+      sizeParts)
     val eps = 1e-9
     val alpha = ceil(lit(threshold) * col("a_nw") - eps)
     val filtered = joined

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Skew
+
 /** Entity resolution: fuzzy record matching under an edit-distance bound
   * — the "same customer typed twice" / "same author, two spellings"
   * problem a curation pipeline hits when joining records that lack a
@@ -37,11 +39,9 @@ object Entity {
     *    maxDist > 2 (variant counts grow as C(len, d)) or long keys:
     *    `abs(len(a) − len(b)) ≤ maxDist` prunes before the DP; blocks
     *    above `hotBlockCap` rows go through the lossless grid-salted
-    *    self-join the dedup pipelines use ([[Dedup]]): a row with group
-    *    g replicates to cells (g,·)/(·,g), every pair meets in exactly
-    *    one cell, spreading the same candidate set over G² tasks.
-    *    Hot-block detection map-side-combines to sizes; the driver holds
-    *    at most 64 (block, n) rows — the bounded-collect class.
+    *    self-join every dedup pair kernel uses
+    *    ([[graft.ops.Skew.gridJoin]]): the same candidate set spread
+    *    over G² tasks, with a bounded hot-block census.
     *
     * The verify is always the native
     * [[graft.functions.TextExpressions.EditDistanceWithin]] kernel:
@@ -101,35 +101,11 @@ object Entity {
     // relieve (the r15 ScanSpread rationale).
     val probe = if (probePartitions > 0)
       slim.repartition(probePartitions, col("id")) else slim
-    val a = probe.toDF(("a_id" +: "a_s" +: blockCols): _*)
-    val b = slim.toDF(("b_id" +: "b_s" +: blockCols): _*)
-    // single-column fingerprint of the block key, used ONLY to route
-    // rows to the hot (salted) vs cold path — the joins below always
-    // include the real block columns, so a fingerprint collision merely
-    // salts an extra block, never crosses blocks.
-    def bk(df: DataFrame) = xxhash64(blockCols.map(df(_)): _*)
-    val hotRows = slim.groupBy(blockCols.map(col): _*)
-      .agg(count(lit(1)).as("n")).filter(col("n") > hotBlockCap)
-      .select(xxhash64(blockCols.map(col): _*).as("bk"), col("n"))
-      .orderBy(col("n").desc, col("bk")).limit(64).collect()
-    val joined =
-      if (hotRows.isEmpty) a.join(b, blockCols)
-      else {
-        val hot = hotRows.map(_.getLong(0)).toSeq
-        val maxN = hotRows.map(_.getLong(1)).max
-        val grid = math.min(32L, (maxN + hotBlockCap - 1) / hotBlockCap).toInt
-        val cold = a.filter(!bk(a).isin(hot: _*))
-          .join(b.filter(!bk(b).isin(hot: _*)), blockCols)
-        val aHot = a.filter(bk(a).isin(hot: _*))
-          .withColumn("g1", pmod(xxhash64(col("a_id")), lit(grid.toLong)))
-          .withColumn("g2", explode(sequence(lit(0L), lit(grid - 1L))))
-        val bHot = b.filter(bk(b).isin(hot: _*))
-          .withColumn("g2", pmod(xxhash64(col("b_id")), lit(grid.toLong)))
-          .withColumn("g1", explode(sequence(lit(0L), lit(grid - 1L))))
-        cold.unionByName(
-          aHot.join(bHot, blockCols ++ Seq("g1", "g2")).drop("g1", "g2"))
-      }
-    joined
+    // hot blocks route on a single-column fingerprint of the block key;
+    // the join itself always uses the real block columns
+    Skew.gridJoin(probe.toDF(("a_id" +: "a_s" +: blockCols): _*),
+        slim.toDF(("b_id" +: "b_s" +: blockCols): _*), blockCols,
+        xxhash64(blockCols.map(col): _*), hotBlockCap, Skew.Occurrences)
       .filter(col("a_id") < col("b_id"))
       .filter(abs(length(col("a_s")) - length(col("b_s"))) <= maxDist)
       .withColumn("dist", graft.functions.TextExpressions
@@ -169,9 +145,7 @@ object Entity {
     // join-backs each re-ran the upstream scan + filters (5 scans of the
     // same table in the before-plan); the sides are disjoint so the
     // batch flag recovers each exactly from the shared blocks.
-    val tagged = slim(batch).withColumn("__batch", lit(true))
-      .unionByName(slim(existing).withColumn("__batch", lit(false)))
-      .localCheckpoint()
+    val tagged = Dedup.tagBatch(slim(batch), slim(existing)).localCheckpoint()
     val sNew = tagged.filter(col("__batch")).drop("__batch")
     val sAll = tagged.drop("__batch")
     def variants(df: DataFrame, role: String): DataFrame = {

@@ -39,28 +39,18 @@ object PairStats {
     val rest = if (zipf || xsource) args.drop(1) else args
     val dir = rest(0)
     val threshold = if (rest.length > 1) rest(1).toDouble else 0.8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     val docs = if (zipf) graft.gen.ZipfCorpus(spark, dir)
                else Tables(spark, dir, "documents")
     val blockCols = if (zipf) Seq.empty[String]
                     else if (xsource) Seq("lang")
                     else Seq("lang", "source")
-    val d = docs.select(
-      (col("doc_id").as("id") +: blockCols.map(col)) :+
-        array_sort(array_distinct(split(col("text"), "\\s+"))).as("w"): _*)
-      .withColumn("nw", size(col("w")))
-    val nDocs = d.count()
+    val tok = Dedup.tokenized(docs, blockCols, "text", "doc_id", 10000)
+    val nDocs = tok.d.count()
     val t0 = System.nanoTime()
-    val candidates = Dedup.prefixCandidates(
-      d, blockCols, threshold, commonVocab = 10000, hotBucketCap = 100000).count()
+    val candidates = Dedup.prefixCandidates(tok.d, blockCols, threshold,
+      10000, hotBucketCap = 100000, Some(tok.ranks), None, tok.parts).count()
     val tCand = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     val results = Dedup.prefixJaccardPairs(
@@ -81,24 +71,15 @@ object PairStats {
     val zipf = args.headOption.contains("--containment-zipf")
     val dir = args(1)
     val threshold = if (args.length > 2) args(2).toDouble else 0.9
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val docs = if (zipf) graft.gen.ZipfCorpus.materialized(spark, dir)
                else Tables(spark, dir, "documents")
     val blockCols = if (zipf) Seq.empty[String] else Seq("lang", "source")
-    val d = docs.select(
-      (col("doc_id").as("id") +: blockCols.map(col)) :+
-        array_sort(array_distinct(split(col("text"), "\\s+"))).as("w"): _*)
-      .withColumn("nw", size(col("w")))
-    val nDocs = d.count()
-    val candidates = Dedup.containmentCandidates(
-      d, blockCols, threshold, commonVocab = 10000, hotBucketCap = 100000).count()
+    val tok = Dedup.tokenized(docs, blockCols, "text", "doc_id", 10000)
+    val nDocs = tok.d.count()
+    val candidates = Dedup.containmentCandidatesAB(tok.d, tok.d, tok.ranks,
+      blockCols, threshold, hotBucketCap = 100000, None, tok.parts,
+      tok.minNw).count()
     val results = Dedup.containmentPairs(docs, blockCols, threshold).count()
     val amp = if (results > 0) candidates.toDouble / results else Double.NaN
     println(f"[pairstats] containment docs=$nDocs candidates=$candidates " +
@@ -106,23 +87,23 @@ object PairStats {
     spark.stop()
   }
 
+  /** The session of every mode, sized by `SPARK_GRAFT_CPUS`. */
+  private def session(overrides: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    graft.runtime.Main.session(s"local[$cpus]", cpus.toInt, overrides: _*)
+  }
+
   private def minhashHot(args: Array[String]): Unit = {
     val n = if (args.length > 1) args(1).toInt else 2000
     val cap = if (args.length > 2) args(2).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing would merge the small partitions and blur the
-      // per-task spread this tool exists to measure; the broadcast join a
-      // 2k-doc corpus gets would hide the hot reduce cell entirely — at
-      // 100 TB the bucket side is not broadcastable, so force the
-      // sort-merge/shuffle-hash shape the claim is about
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE coalescing would merge the small partitions and blur the
+    // per-task spread this tool exists to measure; the broadcast join a
+    // 2k-doc corpus gets would hide the hot reduce cell entirely — at
+    // 100 TB the bucket side is not broadcastable, so force the
+    // sort-merge/shuffle-hash shape the claim is about
+    val spark = session(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     import spark.implicits._
 
     // boilerplate corpus: template text with one varying token — survives

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Per-query micro-benchmark: warm up, then run each named query `reps`
@@ -17,14 +15,7 @@ object MicroBench {
     val names = args.drop(2)
     require(names.nonEmpty, "usage: MicroBench <sfDir> <reps> <query>...")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.runtime.Main.session(s"local[$cpus]", cpus.toInt)
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()

@@ -21,10 +21,13 @@ class ExchangeSizingSpec extends SparkSpec {
   test("gate: zero and sf-scale volumes keep the default layout; overflow volumes engage sized") {
     assert(ExchangeSizing.shjBuildParts(spark, 0L, 150) == 0)
     // every sf ≤ 1 volume in the repo sits well under the gate — the
-    // plan-identity contract the round-12 measurements rest on
-    assert(ExchangeSizing.shjBuildParts(spark, 2746947L, 150, 2.0) == 0,
+    // plan-identity contract the round-12 measurements rest on — judged
+    // at the deployment parameters (8 g heap, 32 slots, fraction 0.6,
+    // 32 shuffle partitions), not at the test JVM's heap
+    val deployed = ExchangeSizing.perTaskBudgetBytes(8L << 30, 32, 0.6)
+    assert(ExchangeSizing.shjBuildParts(deployed, 32, 2746947L, 150, 2.0) == 0,
       "sf1 token volume must not engage")
-    assert(ExchangeSizing.shjBuildParts(spark, 25800000L, 74) == 0,
+    assert(ExchangeSizing.shjBuildParts(deployed, 32, 25800000L, 74, 1.0) == 0,
       "sf1 variant volume must not engage")
     val rpm = ExchangeSizing.rowsPerMap(spark, 300)
     val layout = spark.sessionState.conf.numShufflePartitions

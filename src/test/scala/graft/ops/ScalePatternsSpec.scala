@@ -42,6 +42,59 @@ class ScalePatternsSpec extends SparkSpec {
     assert(partial.count() == 16)
   }
 
+  // grid join fixtures: rows (id, k, payload) with key "hot" planted on
+  // 60 rows, the rest spread thin, and one id repeated so the plain
+  // join emits duplicate rows the grid must keep
+  private def gridSides(hotRows: Int) = {
+    import spark.implicits._
+    val rows = (1 to hotRows).map(i => (i.toLong, "hot", i % 3)) ++
+      (1 to 40).map(i => (100L + i, s"k${i % 10}", i % 3)) :+ ((7L, "hot", 1))
+    val df = rows.toDF("id", "k", "p")
+    (df.toDF("a_id", "k", "a_p"), df.toDF("b_id", "k", "b_p"))
+  }
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.select("k", "a_id", "a_p", "b_id", "b_p").collect().map(_.toSeq)
+      .groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  test("gridJoin: a planted hot key yields the plain join's row multiset under both meters") {
+    val (a, b) = gridSides(60)
+    val plain = multiset(a.join(b, Seq("k")))
+    for (meter <- Seq(Skew.Occurrences, Skew.PairProduct)) {
+      // cap 20: the 61-row key is hot under both meters, the 4-row keys
+      // (product 16) stay on the cold join
+      val grid = Skew.gridJoin(a, b, Seq("k"), col("k"), 20, meter)
+      val plan = grid.queryExecution.optimizedPlan.toString
+      assert(plan.contains("Union") && plan.contains("Generate"),
+        s"$meter must take the grid path")
+      assert(multiset(grid) == plain, s"$meter changed the row multiset")
+    }
+    // the grid rule: Occurrences grows with rows, PairProduct with the
+    // product's square root; both stop at 32
+    assert(Skew.gridSide(Skew.Occurrences, 61, 10) == 7)
+    assert(Skew.gridSide(Skew.PairProduct, 61L * 61, 10) == 20)
+    assert(Skew.gridSide(Skew.Occurrences, 1L << 40, 10) == 32)
+  }
+
+  test("gridJoin: a hot key derived from the join columns routes rows, the join keeps them") {
+    val (a, b) = gridSides(60)
+    val plain = multiset(a.join(b, Seq("k")))
+    // route on a hash of the key (Entity's block fingerprint shape)
+    val grid = Skew.gridJoin(a, b, Seq("k"), xxhash64(col("k")), 20,
+      Skew.Occurrences)
+    assert(grid.queryExecution.optimizedPlan.toString.contains("Generate"))
+    assert(multiset(grid) == plain)
+  }
+
+  test("gridJoin: with no hot key the plan is the plain join") {
+    val (a, b) = gridSides(5)
+    for (meter <- Seq(Skew.Occurrences, Skew.PairProduct)) {
+      val grid = Skew.gridJoin(a, b, Seq("k"), col("k"), 1000, meter)
+      val plan = grid.queryExecution.executedPlan.toString
+      assert(!plan.contains("Union") && !plan.contains("Generate"), plan)
+      assert(multiset(grid) == multiset(a.join(b, Seq("k"))))
+    }
+  }
+
   test("date-partitioned layout prunes partitions at the scan") {
     val dir = Files.createTempDirectory("graft-part").toString
     val ev = Tables.events(spark, sfDir)
